@@ -1,0 +1,257 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.LongAdder
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
+import graft.index.{BigGazetteer, PageSynth}
+import graft.index.IndexBuilder.CarmenIndex
+import graft.query.{Forward, Reverse}
+
+/** Diagnostic probes: the CLI's session builder, one timing helper and the
+  * index's own warm-up (`CarmenIndex.materialize`).
+  *
+  * Usage: runMain graft.Probe <subcommand> [args]
+  *  - `one <sfDir> <query...>`: time named `SparkEntry.queries` entries.
+  *    Name each query twice: the first run pays planning and codegen, so
+  *    judge the second. Threads from SPARK_GRAFT_CPUS (default 16).
+  *  - `plans`: scan pushdown, column pruning and broadcast selection of the
+  *    relational entries, at the scale-factor directory SPARK_GRAFT_SF_DIR.
+  *  - `geoplan`: the forward plan holds no nested-loop or cartesian join
+  *    and the postings build no global window.
+  *  - `dump-plans <outDir> <suffix> <query...>`: write the formatted and the
+  *    final AQE plan of named entries (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS).
+  *  - `pm [cpus] [n]`: phrasematch branch, postings probe and pm-row times.
+  *  - `ctx [cpus] [n]`: merged candidate table sizes, and plans and times of
+  *    the candidate branches and the context-fill tile join (plans go to
+  *    /tmp/ctxplans).
+  *  - `shuffle [cpus] [n]`: shuffle bytes, task CPU and allocation of one
+  *    forward() call.
+  *  - `stages forward|fuzzy|address [cpus] [n]`: warm and per-stage
+  *    (`GeocodeStats`) times of one query set.
+  * `cpus` defaults to 32. The BigGazetteer probes use
+  * SPARK_GRAFT_SCALE_PLACES places (default 22000).
+  */
+object Probe {
+  def main(args: Array[String]): Unit = {
+    val rest = args.drop(1)
+    def cpusAt(i: Int) = rest.lift(i).getOrElse("32")
+    def nAt(i: Int, default: Int) = rest.lift(i).map(_.toInt).getOrElse(default)
+    args.headOption.getOrElse("") match {
+      case "one" => one(rest(0), rest.drop(1))
+      case "plans" => plans()
+      case "geoplan" => geoPlan()
+      case "dump-plans" => dumpPlans(rest(0), rest(1), rest.drop(2))
+      case "pm" => pm(cpusAt(0), nAt(1, 2000))
+      case "ctx" => ctx(cpusAt(0), nAt(1, 2000))
+      case "shuffle" => shuffle(cpusAt(0), nAt(1, 10000))
+      case "stages" if rest.nonEmpty =>
+        stages(rest(0), cpusAt(1), nAt(2, if (rest(0) == "forward") 2000 else 1000))
+      case _ =>
+        System.err.println("usage: graft.Probe one|plans|geoplan|dump-plans|" +
+          "pm|ctx|shuffle|stages [args] (see the Probe scaladoc)")
+        sys.exit(1)
+    }
+  }
+
+  private def withSession(cpus: String)(f: SparkSession => Unit): Unit = {
+    val spark = CliArgs.session(cpus)
+    try f(spark) finally spark.stop()
+  }
+
+  private def time[A](tag: String)(f: => A): A = {
+    val t0 = System.nanoTime()
+    val r = f
+    println(f"PROBE $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
+    r
+  }
+
+  private val NPlaces =
+    sys.env.getOrElse("SPARK_GRAFT_SCALE_PLACES", "22000").toInt
+
+  private def bigIndex(spark: SparkSession): CarmenIndex =
+    time("build_index")(BigGazetteer.buildIndex(spark, NPlaces).materialize())
+
+  private def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+    sys.error("set SPARK_GRAFT_SF_DIR to a scale-factor data directory"))
+
+  private def one(dir: String, names: Seq[String]): Unit =
+    withSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")) { spark =>
+      names.foreach { q =>
+        val rows = time(s"one $q")(SparkEntry.queries(q)(spark, dir).count())
+        println(s"PROBE one $q rows=$rows")
+      }
+    }
+
+  private def plans(): Unit = withSession("8") { spark =>
+    val d = sfDir
+    def audit(name: String): Unit = {
+      val df = SparkEntry.queries(name)(spark, d)
+      df.count() // finalize the AQE plan before inspecting it
+      val plan = df.queryExecution.executedPlan.toString
+      def has(s: String) = if (plan.contains(s)) "yes" else "NO"
+      println(s"PLAN $name: pushedFilters=${has("PushedFilters: [")} " +
+        s"broadcastHash=${has("BroadcastHashJoin")} wholestage=${has("*(1)")}")
+    }
+    Seq("q1_pricing", "q5_region_revenue", "q_brand_agg").foreach(audit)
+    // a two-column projection must not read all the lineitem columns
+    val s = spark.read.parquet(s"$d/lineitem.parquet")
+      .select(col("l_orderkey"), col("l_quantity"))
+      .where(col("l_quantity") > 40)
+      .queryExecution.executedPlan.toString
+    println("PLAN pruned_scan: readsOnlyTwoCols=" +
+      s.contains("ReadSchema: struct<l_orderkey:bigint,l_quantity:double>") +
+      " pushed=" + s.contains("GreaterThan(l_quantity,40.0)"))
+  }
+
+  private def geoPlan(): Unit = withSession("8") { spark =>
+    import spark.implicits._
+    val index = PageSynth.buildIndex(spark, 300)
+    // phrase ids are range-partitioned plus offsets: no global Window
+    val pplan = index.layers.head.postings.queryExecution.executedPlan.toString
+    println("PLAN postings: globalWindow=" +
+      (if (pplan.contains("Window [") && !pplan.contains("windowspecdefinition(pid"))
+        "CHECK" else "no"))
+    val fwd = Forward.forward(spark, index,
+      Seq((1L, "West Lake View Rd Englewood"), (2L, "Engle"))
+        .toDF("query_id", "query"))
+    fwd.count()
+    val fplan = fwd.queryExecution.executedPlan.toString
+    def bad(op: String) = if (fplan.contains(op)) "YES(BAD)" else "none"
+    println(s"PLAN forward: nestedLoop=${bad("BroadcastNestedLoopJoin")} " +
+      s"cartesian=${bad("CartesianProduct")}")
+  }
+
+  private def dumpPlans(outDir: String, suffix: String, names: Seq[String]): Unit =
+    withSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")) { spark =>
+      Files.createDirectories(Paths.get(outDir))
+      names.foreach { name =>
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val formatted = df.queryExecution.explainString(FormattedMode)
+        df.count() // finalize AQE
+        val out = Paths.get(s"$outDir/${name}_$suffix.txt")
+        Files.writeString(out,
+          s"== explain(formatted), initial plan ==\n$formatted\n" +
+            s"== executed plan (AQE final) ==\n${df.queryExecution.executedPlan}\n")
+        println(s"PLAN dumped $name -> $out")
+      }
+    }
+
+  /** The phrasematch internals with default options, run twice. */
+  private def pm(cpus: String, nq: Int): Unit = withSession(cpus) { spark =>
+    val index = bigIndex(spark)
+    val qs = BigGazetteer.forwardQueries(spark, nq, NPlaces)
+    Forward.forward(spark, index, qs).count() // warm
+    for (round <- 1 to 2) {
+      println(s"--- round $round ---")
+      val subs = time("subqueries_ck") {
+        val s = Forward.subqueriesForProbe(spark, index, qs)
+        s.count(); s
+      }
+      Forward.phrasematchBranchesForProbe(index, subs).foreach { case (name, df) =>
+        time(s"branch_$name")(println(s"  rows=${df.count()}"))
+      }
+      val matched = time("postings_probe") {
+        val m = Forward.phrasematchJoinsForProbe(index, subs)
+        println(s"  rows=${m.count()}"); m
+      }
+      time("pm_rows_ck") {
+        println("  rows=" + Forward.pmRowsForProbe(index, matched)
+          .localCheckpoint().count())
+      }
+    }
+  }
+
+  private def ctx(cpus: String, nq: Int): Unit = withSession(cpus) { spark =>
+    val outDir = Files.createDirectories(Paths.get("/tmp/ctxplans"))
+    val index = bigIndex(spark)
+    // sums over the per-qsig MERGED tables, not per-layer tables
+    val cand = index.candByQsig.values
+    println(s"PROBE grouped sizes mergedDeletesG=${cand.map(_._1.count()).sum} " +
+      s"mergedPrefixesG=${cand.map(_._2.count()).sum} " +
+      s"mergedPrefixDeletesG=${cand.map(_._3.count()).sum}")
+    def dump(tag: String, df: DataFrame): Unit =
+      Files.writeString(outDir.resolve(s"$tag.txt"),
+        df.queryExecution.executedPlan.toString)
+
+    val qs = BigGazetteer.forwardQueries(spark, nq, NPlaces)
+    Forward.forward(spark, index, qs).count() // warm
+    val subs = Forward.subqueriesForProbe(spark, index, qs)
+    subs.count()
+    Forward.phrasematchBranchesForProbe(index, subs).foreach { case (name, df) =>
+      time(s"branch_$name")(println(s"  rows=${df.count()}"))
+      dump(s"branch_$name", df)
+    }
+    val matched = Forward.phrasematchJoinsForProbe(index, subs)
+    time("postings_probe")(println(s"  rows=${matched.count()}"))
+    dump("postings_probe", matched)
+
+    // the context-fill tile join, as forward() calls it
+    val leadPts = BigGazetteer.reversePoints(spark, nq, NPlaces)
+      .select(col("query_id"), lit(1).as("sub"), col("lon"), col("lat"))
+    val cands = Reverse.candidates(leadPts, index,
+      distanceMode = false, radiusMiles = 0.0, None, None)
+    time("ctx_candidates")(println(s"  rows=${cands.count()}"))
+    dump("ctx_candidates", cands.toDF())
+  }
+
+  /** Shuffle bytes, task CPU and allocation summed over one warm forward()
+    * call. Unlike wall time these do not move with host load, so they are
+    * the A/B number for plan-shape changes.
+    */
+  private def shuffle(cpus: String, nq: Int): Unit = withSession(cpus) { spark =>
+    val index = bigIndex(spark)
+    val shufWrite, shufRead, cpuNs, tasks = new LongAdder
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach { m =>
+          shufWrite.add(m.shuffleWriteMetrics.bytesWritten)
+          shufRead.add(m.shuffleReadMetrics.totalBytesRead)
+          cpuNs.add(m.executorCpuTime)
+          tasks.increment()
+        }
+    }
+    def run(): Long =
+      Forward.forward(spark, index, BigGazetteer.forwardQueries(spark, nq, NPlaces))
+        .count()
+    run() // warm (codegen), unmeasured
+
+    spark.sparkContext.addSparkListener(listener)
+    val alloc0 = ScalingBench.allocatedBytes()
+    val t0 = System.nanoTime()
+    val rows = run()
+    val wall = (System.nanoTime() - t0) / 1e9
+    val allocGb = (ScalingBench.allocatedBytes() - alloc0) / 1e9
+    // task-end events of a finished job reach the listener within
+    // milliseconds; wait before reading the adders
+    Thread.sleep(3000)
+    println(f"""{"metric":"forward_shuffle_probe","cpus":"$cpus","queries":$nq,"rows":$rows,"shuffle_write_mb":${shufWrite.sum / 1e6}%.1f,"shuffle_read_mb":${shufRead.sum / 1e6}%.1f,"task_cpu_sec":${cpuNs.sum / 1e9}%.1f,"tasks":${tasks.sum},"alloc_gb":$allocGb%.1f,"wall_sec":$wall%.1f}""")
+  }
+
+  /** One query set: an unmeasured warm-up, a timed warm run, then a stats
+    * run for the per-stage split (pm_join / spatialmatch / verifymatch /
+    * context_rank).
+    */
+  private def stages(set: String, cpus: String, nq: Int): Unit = withSession(cpus) { spark =>
+    val queries: (SparkSession, Int, Int) => DataFrame = set match {
+      case "forward" => BigGazetteer.forwardQueries
+      case "fuzzy" => BigGazetteer.fuzzyQueries
+      case "address" => BigGazetteer.addressQueries
+      case other => sys.error(s"stages: unknown query set '$other' " +
+        "(forward|fuzzy|address)")
+    }
+    val index = bigIndex(spark)
+    val qs = queries(spark, nq, NPlaces).localCheckpoint()
+    def run(tag: String, stats: Option[Forward.GeocodeStats]): Unit = {
+      val rows = time(s"$set $tag")(
+        Forward.forward(spark, index, qs, stats = stats).count())
+      println(s"PROBE $set $tag rows=$rows")
+      stats.foreach(s => println(s"PROBE $set stages: $s"))
+    }
+    run("warmup", None)
+    run("warm", None)
+    run("stats", Some(new Forward.GeocodeStats()))
+  }
+}

@@ -58,7 +58,7 @@ object ScalingBench {
     * to MEASURE (not assert) whether the ingest 8->32 scaling gap is an
     * allocation/memory-bandwidth ceiling.
     */
-  private def allocatedBytes(): Long = {
+  private[graft] def allocatedBytes(): Long = {
     java.lang.management.ManagementFactory.getThreadMXBean match {
       case tmx: com.sun.management.ThreadMXBean =>
         tmx.getAllThreadIds.map(id =>
@@ -93,16 +93,7 @@ object ScalingBench {
 
     // B. batch forward geocode against the ~110k-entity gazetteer (the
     // join path, not per-query planning, dominates at this size)
-    val index = graft.index.BigGazetteer.buildIndex(spark, NPlaces)
-    index.layers.foreach { l =>
-      l.postings.count(); l.tileFeatures.count(); l.features.count()
-    }
-    index.candByQsig.values.foreach { case (d, p, pd) =>
-      d.count(); p.count(); pd.count()
-    }
-    index.allPostingsQsig.count()
-    index.allFeaturesWide.count()
-    index.allTileFeatures.count()
+    val index = graft.index.BigGazetteer.buildIndex(spark, NPlaces).materialize()
     def geocode(n: Int, st: Option[graft.query.Forward.GeocodeStats]): Long = {
       val qs = graft.index.BigGazetteer.forwardQueries(spark, n, NPlaces)
       graft.query.Forward.forward(spark, index, qs, stats = st).count()

@@ -25,7 +25,10 @@ import graft.model._
   */
 object IndexBuilder {
 
-  /** All built tables for one layer. */
+  /** All built tables for one layer. `postings` and `tileFeatures` are
+    * uncached views: queries read them through the [[CarmenIndex]] union
+    * tables, which hold the only resident copy.
+    */
   final case class LayerIndex(
       config: LayerConfig,
       features: DataFrame,     // id, id24, text, score, geometry/geom_bin, center_lon/lat, zxy
@@ -37,20 +40,6 @@ object IndexBuilder {
       prefixDeletes: DataFrame, // variant, phrase, layer (fuzzy-prefix keys)
       quarantine: DataFrame    // id, error (I1/I18 rejects, reference error strings)
   ) {
-    // Grouped candidate tables (the gridstore shape applied to the
-    // phrasematch candidate joins): ONE row per join key with the deduped
-    // (vtext, phrase) payload as an array, grouped once at index time and
-    // cached. The phrasematch joins then deliver whole candidate lists per
-    // key hit and the residual verify runs INSIDE the row (array kernel)
-    // before any explode — the per-query joins never materialize, shuffle
-    // or re-deduplicate the exploded key x phrase fan-out (measured 3.5M
-    // intermediate rows for 2k queries on the prefix-delete join alone).
-    // The flat tables above stay as the storage/export view and are no
-    // longer cached — same net cache footprint.
-    lazy val deletesG: DataFrame = groupCands(deletes, Seq("variant"))
-    lazy val prefixesG: DataFrame = groupCands(prefixes, Seq("pfx", "pfx_len"))
-    lazy val prefixDeletesG: DataFrame = groupCands(prefixDeletes, Seq("variant"))
-
     /** Address layers only: every individual cluster point exploded to a
       * row (feature_id, text, score, number, p_lon, p_lat, pz/px/py tile,
       * idx, layer) — the engine analog of the reference's vectorized
@@ -148,11 +137,18 @@ object IndexBuilder {
           .as("phrase_hash"))
 
   final case class CarmenIndex(layers: Vector[LayerIndex]) {
+    // Forward's layer pruning filters the union tables by layer name.
+    locally {
+      val names = layers.map(_.config.name)
+      require(names.distinct == names,
+        s"duplicate layer names: ${names.diff(names.distinct).distinct.mkString(", ")}")
+    }
     def layer(name: String): LayerIndex = layers.find(_.config.name == name).get
     def maxZoom: Int = layers.map(_.config.zoom).max
-    /** Union of all layers' postings with a `layer` column (already there). */
-    lazy val allPostings: DataFrame =
-      layers.map(_.postings).reduce(_ unionByName _)
+    /** Union of all layers' postings, read from the [[allPostingsQsig]]
+      * cache (the per-layer postings are not cached).
+      */
+    lazy val allPostings: DataFrame = allPostingsQsig.drop("qsig")
     /** Per-grid exploded view of [[allPostings]] (analyze/export scans). */
     lazy val allPostingsFlat: DataFrame = flattenPostings(allPostings)
     /** All layers' tile_features unified with idx/layer columns: one join
@@ -185,12 +181,6 @@ object IndexBuilder {
         .map(_.config.idx).toSet
     /** Distinct layer zooms (for point -> per-zoom tile explosion). */
     lazy val zooms: Vector[Int] = layers.map(_.config.zoom).distinct.sorted
-    /** Union of all layers' fuzzy delete-variant tables. */
-    lazy val allDeletes: DataFrame =
-      layers.map(_.deletes).reduce(_ unionByName _)
-    /** Union of all layers' autocomplete prefix tables. */
-    lazy val allPrefixes: DataFrame =
-      layers.map(_.prefixes).reduce(_ unionByName _)
     /** All layers' postings tagged with their query signature, cached
       * PRE-PARTITIONED on the phrasematch probe's join key (qsig, phrase).
       * The probe join's required distribution is then already satisfied by
@@ -240,12 +230,13 @@ object IndexBuilder {
       }.reduce(_ unionByName _)
         .repartition(col("f_idx"), col("f_id24"))
         .cache()
-    /** Per-querySignature MERGED grouped candidate tables
-      * (deletesG, prefixesG, prefixDeletesG), built once per index and
-      * cached. Sibling layers sharing a query signature collapse into ONE
-      * row per join key (collect_set dedupes (vtext, phrase) across
-      * layers), so the phrasematch candidate joins hit one row per key and
-      * never re-deduplicate sibling-layer fan-out per query. Safe under
+    /** Per-querySignature MERGED grouped candidate tables (`deletes`,
+      * `prefixes` and `prefixDeletes`, each grouped on its join key by
+      * [[groupCands]]), built once per index and cached. Sibling layers
+      * sharing a query signature collapse into ONE row per join key
+      * (collect_set dedupes (vtext, phrase) across layers), so the
+      * phrasematch candidate joins hit one row per key and never
+      * re-deduplicate sibling-layer fan-out per query. Safe under
       * layer pruning: a candidate phrase that only exists in a pruned
       * layer cannot survive the postings inner join (postings are
       * restricted to the allowed layers), so the full-index tables serve
@@ -261,6 +252,21 @@ object IndexBuilder {
           merged(_.prefixes, Seq("pfx", "pfx_len")),
           merged(_.prefixDeletes, Seq("variant"))))
       }
+    /** Fill every cache that queries read: per-layer `features`, the
+      * [[candByQsig]] tables, [[allPostingsQsig]], [[allFeaturesWide]] and
+      * [[allTileFeatures]]. Later calls then pay for lookups, not index
+      * build. A repeated call only rescans the filled caches.
+      */
+    def materialize(): CarmenIndex = {
+      layers.foreach(_.features.count())
+      candByQsig.values.foreach { case (d, p, pd) =>
+        d.count(); p.count(); pd.count()
+      }
+      allPostingsQsig.count()
+      allFeaturesWide.count()
+      allTileFeatures.count()
+      this
+    }
   }
 
   private val coverUdf = udf((geojson: String, zoom: Int, lon: Double, lat: Double) => {
@@ -534,7 +540,6 @@ object IndexBuilder {
           packGridA.as("a"), packGridB.as("b")))).as("g"))
         .select(col("layer"), col("phrase"), col("phrase_id"), col("lang_set"),
           col("g.a").as("gridsA"), col("g.b").as("gridsB"))
-        .cache()
 
       // 5. tile_features: explode covers (S8); geometry travels pre-parsed
       // (geom_bin/geom_type), the JSON string stays on `features` only
@@ -547,7 +552,6 @@ object IndexBuilder {
         .withColumn("x", split(col("zxy_str"), "/").getItem(1).cast("int"))
         .withColumn("y", split(col("zxy_str"), "/").getItem(2).cast("int"))
         .drop("zxy_str")
-        .cache()
 
       // I16 cleanDocs (reference lib/indexer/index.js:254-262): non-address
       // sources drop the feature-store geometry — tile_features keeps the

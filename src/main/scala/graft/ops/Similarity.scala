@@ -99,27 +99,6 @@ object Similarity {
       .select(col("query_id"), col("corpus_id"), col("rank"))
   }
 
-  /** Fused cosine kernel: one UDF call (two array conversions) per pair.
-    * Keeping dot + both norms in a single pass matters because Catalyst
-    * collapses per-side norm projections into the join output, silently
-    * re-evaluating them per pair.
-    */
-  val cosineUdf: UserDefinedFunction =
-    udf((a: Seq[Float], b: Seq[Float]) => {
-      var d = 0.0
-      var na = 0.0
-      var nb = 0.0
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val x = a(i).toDouble
-        val y = b(i).toDouble
-        d += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    })
-
   /** All pairs with cosine similarity above a threshold (ids only — floats
     * never leave the plan, so results are engine-exact).
     *
@@ -299,7 +278,7 @@ object Similarity {
     * hyperplane signs precomputed into bitset planes rather than hashed in
     * the hot loop.
     */
-  private[graft] def allSigsUdf(tables: Int, bits: Int, extraBits: Int): UserDefinedFunction =
+  private def allSigsUdf(tables: Int, bits: Int, extraBits: Int): UserDefinedFunction =
     udf((v: Seq[Float]) => {
       val per = bits + extraBits
       val total = tables * per

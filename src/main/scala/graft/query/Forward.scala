@@ -1117,7 +1117,7 @@ object Forward {
   }
 
   /** Probe hooks: the phrasematch internals with default options, for the
-    * stage-attribution mains (ProbePm2).
+    * stage-attribution probes (`Probe pm`, `Probe ctx`).
     */
   private[graft] def subqueriesForProbe(spark: SparkSession, index: CarmenIndex,
                                         queries: DataFrame): DataFrame =

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.index.{IndexBuilder, PageSynth}
 import graft.query.{Forward, Reverse}
 
@@ -55,6 +56,31 @@ class GeocodeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("phrase_id").collect()
     val sortedPhrases = phrases.map(_.getString(0))
     assert(sortedPhrases.sameElements(sortedPhrases.sorted))
+  }
+
+  test("materialize() leaves one resident copy of postings and tile rows") {
+    index.materialize()
+    for (l <- index.layers) {
+      assert(l.postings.storageLevel === StorageLevel.NONE, l.config.name)
+      assert(l.tileFeatures.storageLevel === StorageLevel.NONE, l.config.name)
+    }
+    def storage(): Map[Int, Long] = spark.sparkContext.getRDDStorageInfo
+      .map(r => r.id -> (r.memSize + r.diskSize)).toMap
+    val first = storage()
+    index.materialize()
+    val second = storage()
+    // the context cleaner may release unrelated blocks in between, but a
+    // repeated warm-up adds no cached RDD and grows none
+    assert(second.keySet.subsetOf(first.keySet))
+    assert(second.values.sum === first.filter(e => second.contains(e._1)).values.sum)
+    assert(index.allPostings.count() === index.layers.map(_.postings.count()).sum)
+  }
+
+  test("an index rejects two layers with the same name") {
+    val street = index.layer("street")
+    val e = intercept[IllegalArgumentException](
+      IndexBuilder.CarmenIndex(Vector(street, index.layer("place"), street)))
+    assert(e.getMessage.contains("duplicate layer names: street"))
   }
 
   test("forward geocode: full stack (worked example)") {
