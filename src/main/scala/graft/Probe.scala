@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import graft.index.{BigGazetteer, PageSynth}
 import graft.index.IndexBuilder.CarmenIndex
-import graft.query.{Forward, Reverse}
+import graft.query.{Forward, Phrasematch, Reverse, Spatialmatch}
 
 /** Diagnostic probes: the CLI's session builder, one timing helper and the
   * index's own warm-up (`CarmenIndex.materialize`).
@@ -139,26 +139,39 @@ object Probe {
       }
     }
 
-  /** The phrasematch internals with default options, run twice. */
+  /** The subquery rows of `qs` with default options, as forward() makes
+    * them (all layers searchable), materialized.
+    */
+  private def subqueries(spark: SparkSession, index: CarmenIndex,
+                         qs: DataFrame): DataFrame = {
+    val s = Phrasematch.subqueries(spark, qs, Phrasematch.queryGroups(index),
+      proximityDefined = false).localCheckpoint()
+    s.count(); s
+  }
+
+  private def branches(index: CarmenIndex, subs: DataFrame): Vector[(String, DataFrame)] =
+    Phrasematch.candidateBranches(index, index, subs, autocomplete = true, fuzzy = true)
+
+  private def joins(index: CarmenIndex, subs: DataFrame): DataFrame =
+    Phrasematch.joins(index, index, subs, autocomplete = true, fuzzy = true)
+
+  /** The phrasematch stages with default options, run twice. */
   private def pm(cpus: String, nq: Int): Unit = withSession(cpus) { spark =>
     val index = bigIndex(spark)
     val qs = BigGazetteer.forwardQueries(spark, nq, NPlaces)
     Forward.forward(spark, index, qs).count() // warm
     for (round <- 1 to 2) {
       println(s"--- round $round ---")
-      val subs = time("subqueries_ck") {
-        val s = Forward.subqueriesForProbe(spark, index, qs)
-        s.count(); s
-      }
-      Forward.phrasematchBranchesForProbe(index, subs).foreach { case (name, df) =>
+      val subs = time("subqueries_ck")(subqueries(spark, index, qs))
+      branches(index, subs).foreach { case (name, df) =>
         time(s"branch_$name")(println(s"  rows=${df.count()}"))
       }
       val matched = time("postings_probe") {
-        val m = Forward.phrasematchJoinsForProbe(index, subs)
+        val m = joins(index, subs)
         println(s"  rows=${m.count()}"); m
       }
       time("pm_rows_ck") {
-        println("  rows=" + Forward.pmRowsForProbe(index, matched)
+        println("  rows=" + Spatialmatch.pmRows(index, None, matched)
           .localCheckpoint().count())
       }
     }
@@ -178,13 +191,12 @@ object Probe {
 
     val qs = BigGazetteer.forwardQueries(spark, nq, NPlaces)
     Forward.forward(spark, index, qs).count() // warm
-    val subs = Forward.subqueriesForProbe(spark, index, qs)
-    subs.count()
-    Forward.phrasematchBranchesForProbe(index, subs).foreach { case (name, df) =>
+    val subs = subqueries(spark, index, qs)
+    branches(index, subs).foreach { case (name, df) =>
       time(s"branch_$name")(println(s"  rows=${df.count()}"))
       dump(s"branch_$name", df)
     }
-    val matched = Forward.phrasematchJoinsForProbe(index, subs)
+    val matched = joins(index, subs)
     time("postings_probe")(println(s"  rows=${matched.count()}"))
     dump("postings_probe", matched)
 

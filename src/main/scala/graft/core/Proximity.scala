@@ -4,7 +4,6 @@ package graft.core
   * (reference lib/util/proximity.js, lib/constants.js:10-14).
   */
 object Proximity {
-  val CoalesceProximityRadius = 200.0
   val Z6Radius = 1800.0
   val Z12Radius = 600.0
   val Z14Radius = 100.0

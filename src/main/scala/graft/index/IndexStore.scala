@@ -37,10 +37,6 @@ object IndexStore {
   def isComplete(spark: SparkSession, root: String, layer: String): Boolean =
     fs(spark, root).exists(markerPath(root, layer))
 
-  /** One lineage row per (layer, table, partition value). */
-  final case class LineageRow(layer: String, table: String, partition: String,
-                              rows: Long)
-
   /** Persist one built layer + its lineage; marks the layer complete. */
   def persistLayer(spark: SparkSession, l: IndexBuilder.LayerIndex,
                    root: String): Unit = {

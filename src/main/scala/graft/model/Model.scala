@@ -69,7 +69,6 @@ final case class LayerConfig(
 ) {
   /** Effective geocoder_name (reference byname grouping). */
   def gname: String = if (geocoderName.nonEmpty) geocoderName else name
-  def ndxKey: String = gname
   /** Types this source can stack as (reference bytype registration). */
   def allTypes: Seq[String] = if (geocoderTypes.nonEmpty) geocoderTypes else Seq(typ)
   /** carmen:conflict key (reference context.js:652). */
@@ -119,34 +118,6 @@ final case class GeoDoc(
     // at index time; loses dedupe/sort ties to non-omitted duplicates
     // (reference geocode-unit.duplicate-address.test.js)
     omitted: Boolean = false
-)
-
-/** One phrase posting grid row (flattened gridstore entry). */
-final case class Posting(
-    layer: String,
-    phrase: String,
-    phraseId: Long,
-    langSet: String,          // sorted comma-joined language list
-    relev: Double,            // phrase relevance (0.8 - 1.0 buckets)
-    score3: Int,              // 3-bit log-scaled feature score
-    id24: Long,               // feature id % 2^24
-    x: Int,
-    y: Int,
-    phraseHash: Int
-)
-
-/** Query-side phrasematch (reference lib/geocoder/phrasematch.js:585-621). */
-final case class PhraseMatch(
-    queryId: Long,
-    layer: String,
-    idx: Int,
-    ndx: Int,
-    zoom: Int,
-    subquery: String,
-    mask: Int,
-    weight: Double,
-    prefix: Boolean,
-    scorefactor: Double
 )
 
 /** A coalesce cover entry (reference lib/geocoder/spatialmatch.js:208-226). */

@@ -115,28 +115,6 @@ object Multimodal {
     } else Array.fill(8)(0.0f)
   })
 
-  /** Resize kernel: PNGs are decoded + nearest-neighbor downscaled by
-    * `factor` and re-encoded; WAVs keep every `factor`-th sample.
-    */
-  def resampleUdf(factor: Int): UserDefinedFunction = udf((bytes: Array[Byte]) => {
-    if (MediaCodec.isPng(bytes)) {
-      MediaCodec.decodePng(bytes) match {
-        case Some(p) if p.channels == 3 =>
-          MediaCodec.resizePng(p, math.max(1, p.width / factor),
-            math.max(1, p.height / factor))
-        case _ => Array.emptyByteArray
-      }
-    } else if (MediaCodec.isWav(bytes)) {
-      MediaCodec.decodeWav(bytes) match {
-        case Some(w) =>
-          val sub = Array.tabulate(w.samples.length / factor)(i =>
-            w.samples(i * factor))
-          MediaCodec.encodeWav(w.sampleRate / factor, sub)
-        case None => Array.emptyByteArray
-      }
-    } else Array.emptyByteArray
-  })
-
   /** Synthetic media corpus derived from the events table: REAL encoded
     * files — even event ids become valid PNGs (deterministic gradient +
     * hash-noise pixels), odd ids valid WAVs (two deterministic tones).

@@ -34,17 +34,6 @@ object Similarity {
       s
     })
 
-  val normUdf: UserDefinedFunction =
-    udf((a: Seq[Float]) => {
-      var s = 0.0
-      var i = 0
-      while (i < a.length) {
-        s += a(i).toDouble * a(i).toDouble
-        i += 1
-      }
-      math.sqrt(s)
-    })
-
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
     * vectors. The query set is broadcast pre-normalized; each corpus
     * partition scores its rows against all queries and keeps a local top-k
@@ -178,71 +167,12 @@ object Similarity {
     s
   }
 
-  /** Random-hyperplane (SimHash-for-vectors) signature: bit i is the sign of
-    * the dot with a deterministic +-1 hyperplane from xxhash64(i, j).
-    * Fused JVM kernel, one pass over the vector for all bits.
-    */
-  def hyperplaneSigUdf(bits: Int): UserDefinedFunction =
-    udf((v: Seq[Float]) => {
-      val sums = new Array[Double](bits)
-      var j = 0
-      while (j < v.length) {
-        val x = v(j).toDouble
-        var i = 0
-        while (i < bits) {
-          // deterministic sign: parity of a cheap avalanche of (i, j)
-          var h = (i.toLong << 32) | (j.toLong & 0xffffffffL)
-          h ^= h >>> 33; h *= 0xff51afd7ed558ccdL; h ^= h >>> 33
-          if ((h & 1L) == 0L) sums(i) += x else sums(i) -= x
-          i += 1
-        }
-        j += 1
-      }
-      var out = 0L
-      var i = 0
-      while (i < bits) {
-        if (sums(i) > 0) out |= (1L << i)
-        i += 1
-      }
-      out
-    })
-
-  /** Deterministic multi-table hyperplane signature: table t uses its own
-    * hyperplane family (t mixed into the hash).
-    */
-  def hyperplaneSigTableUdf(bits: Int, table: Int): UserDefinedFunction =
-    udf((v: Seq[Float]) => {
-      val sums = new Array[Double](bits)
-      var j = 0
-      while (j < v.length) {
-        val x = v(j).toDouble
-        var i = 0
-        while (i < bits) {
-          var h = (table.toLong * 0x9e3779b97f4a7c15L) ^
-            ((i.toLong << 32) | (j.toLong & 0xffffffffL))
-          h ^= h >>> 33; h *= 0xff51afd7ed558ccdL; h ^= h >>> 33
-          if ((h & 1L) == 0L) sums(i) += x else sums(i) -= x
-          i += 1
-        }
-        j += 1
-      }
-      var out = 0L
-      var i = 0
-      while (i < bits) { if (sums(i) > 0) out |= (1L << i); i += 1 }
-      out
-    })
-
-  private val cosUdf = udf((a: Seq[Float], b: Seq[Float]) => {
-    val av = normalized(a.toArray); val bv = normalized(b.toArray)
-    dotD(av, bv)
-  })
-
   /** Precomputed hyperplane sign planes, cached per (tables, bits, extraBits,
     * dim) per executor JVM. Row j is a bitset over all tables' bits: bit
     * (t*(bits+extraBits)+i) set means hyperplane (t, i) has a negative sign
-    * at vector element j. The hash matches [[hyperplaneSigTableUdf]] exactly
-    * (table key t for the b0 bits, t+1000 for the bx bits), so fused
-    * signatures are bit-identical to the per-table UDFs'.
+    * at vector element j: the low bit of an avalanche of
+    * (key * 0x9e3779b97f4a7c15) ^ (i << 32 | j), with table key t for the
+    * b0 bits and t+1000 for the bx bits.
     */
   private object SigPlanes {
     private val cache =
@@ -394,43 +324,6 @@ object Similarity {
       .withColumn("cos", dotUdf(col("qv"), col("cv")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("corpus_id"))
     scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("corpus_id"), col("rank"))
-  }
-
-  /** LSH-bucketed approximate NN: candidates share a signature bucket;
-    * verified and ranked by exact cosine within bucket. The scale path for
-    * ANN when the corpus no longer fits a broadcast.
-    */
-  def annLsh(df: DataFrame, k: Int, bits: Int = 16,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // one shuffle: vectors grouped by signature bucket, then pure-JVM
-    // all-pairs within each bucket (bucket sizes bounded by the bit count;
-    // at scale, hot buckets get salted sub-splits like any skewed key)
-    val sig = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .withColumn("bucket", hyperplaneSigUdf(bits)(col("v")))
-      .as[(Long, Array[Float], Long)]
-    val pairs = sig.groupByKey(_._3).flatMapGroups { (_, it) =>
-      val rows = it.map { case (id, v, _) => (id, normalized(v)) }.toArray
-      rows.iterator.flatMap { case (qid, qv) =>
-        val best = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-          Ordering.by[(Double, Long), (Double, Long)](t => (-t._1, t._2)))
-        rows.foreach { case (cid, cv) =>
-          if (cid != qid) {
-            val cos = dotD(qv, cv)
-            if (best.size < k) best.enqueue((cos, cid))
-            else if (cos > best.head._1 || (cos == best.head._1 && cid < best.head._2)) {
-              best.dequeue(); best.enqueue((cos, cid))
-            }
-          }
-        }
-        best.iterator.map { case (cos, cid) => (qid, cid, cos) }
-      }
-    }.toDF("query_id", "corpus_id", "cos")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("corpus_id"))
-    pairs.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("corpus_id"), col("rank"))
   }

@@ -19,15 +19,6 @@ object TextOps {
   /** Token count (whitespace segmentation). */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** A BPE-ish subword proxy: counts runs of letters, digits, and individual
-    * punctuation marks separately (closer to tokenizer token counts than
-    * whitespace words).
-    */
-  def bpeishTokenCount(text: Column): Column =
-    size(filter(
-      split(text, "(?<=[^\\p{L}\\p{N}])|(?=[^\\p{L}\\p{N}])"),
-      t => length(trim(t)) > 0))
-
   private def countMatches(text: Column, regex: String): Column =
     length(text) - length(regexp_replace(text, regex, ""))
 
@@ -41,19 +32,6 @@ object TextOps {
   def digitRatioMicros(text: Column): Column =
     when(length(text) === 0, lit(0L)).otherwise(
       round(countMatches(text, "[0-9]") * lit(1000000.0) / length(text)).cast("long"))
-
-  def punctRatioMicros(text: Column): Column =
-    when(length(text) === 0, lit(0L)).otherwise(
-      round(countMatches(text, "[.,;:!?'\"()\\[\\]{}-]") * lit(1000000.0) / length(text))
-        .cast("long"))
-
-  /** Mean word length in character micros. */
-  def meanWordLenMicros(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) === 0, lit(0L)).otherwise(
-      round(aggregate(toks, lit(0L), (acc, t) => acc + length(t)) * lit(1000000.0) /
-        size(toks)).cast("long"))
-  }
 
   // Small per-language stopword lists for the language-ID heuristic.
   // Deliberately tiny + deterministic; ship as literals so the expression
@@ -88,16 +66,6 @@ object TextOps {
       .when(de === mx, lit("de"))
       .when(fr === mx, lit("fr"))
       .otherwise(lit("es"))
-  }
-
-  /** Composite quality score in micros: weighted mix of alpha ratio,
-    * stopword ratio, penalties for extreme length.
-    */
-  def qualityScoreMicros(text: Column): Column = {
-    val alpha = alphaRatioMicros(text)
-    val stop = stopwordRatioMicros(text)
-    val lenOk = when(length(text).between(100, 100000), lit(1000000L)).otherwise(lit(300000L))
-    round(alpha * lit(0.4) + stop * lit(0.3) + lenOk * lit(0.3)).cast("long")
   }
 
   /** Word n-gram shingles of the token array (contiguous, space-joined). */

@@ -29,35 +29,31 @@ object StackCoalesce {
     * spatialmatch is the largest post-gridstore stage, so the packed form
     * is the kernel's remaining allocation lever.
     *
-    * HAZARD: as a case class holding Array fields (gridsA/gridsB), the
-    * generated equals/hashCode compare those arrays BY REFERENCE. Every
-    * current use is identity-based (IdentityHashMap memo; mask/ndx reads
-    * in stackable), so this is safe today — but do NOT put Pm instances
-    * through .distinct/Set/groupBy or compare them with ==; two Pms with
-    * equal grid contents in distinct arrays will not be equal.
+    * A plain class, not a case class: equality is identity, which is what
+    * the kernels' IdentityHashMap memo and stackable's mask/ndx reads use.
     */
-  final case class Pm(
-      layer: String,
-      idx: Int,
-      ndx: Int,
-      nonOverlapping: Set[Int],
-      zoom: Int,
-      subquery: String,
-      mask: Int,
-      weight: Double,
-      prefix: Boolean,
-      scorefactor: Double,
-      gridsA: Array[Long],
-      gridsB: Array[Long],      // bit 34 = matchesLanguage (see MlBit)
-      addrNum: String = "",     // numTokenize-captured house number token
-      partial: Boolean = false, // proximity partial-number search
-      catMatch: Boolean = false,// subquery matches a layer category
-      addrPos: Int = -1,        // number-token position in the query (V12 sort)
-      fuzzy: Boolean = false,   // fuzzy-matched (edit distance > 0)
-      nPhrases: Int = 1,        // distinct index phrases merged into this Pm
+  final class Pm(
+      val layer: String,
+      val idx: Int,
+      val ndx: Int,
+      val nonOverlapping: Set[Int],
+      val zoom: Int,
+      val subquery: String,
+      val mask: Int,
+      val weight: Double,
+      val prefix: Boolean,
+      val scorefactor: Double,
+      val gridsA: Array[Long],
+      val gridsB: Array[Long],      // bit 34 = matchesLanguage (see MlBit)
+      val addrNum: String = "",     // numTokenize-captured house number token
+      val partial: Boolean = false, // proximity partial-number search
+      val catMatch: Boolean = false,// subquery matches a layer category
+      val addrPos: Int = -1,        // number-token position in the query (V12 sort)
+      val fuzzy: Boolean = false,   // fuzzy-matched (edit distance > 0)
+      val nPhrases: Int = 1,        // distinct index phrases merged into this Pm
       // geocoder_coalesce_radius of the source (miles); 0 = zoom-scaled
       // default (reference index.js:381 -> carmen-core coalesce)
-      radius: Double = 0.0
+      val radius: Double = 0.0
   )
 
   /** matchesLanguage flag folded into packed-grid B (bit 34; bits 0-33 are

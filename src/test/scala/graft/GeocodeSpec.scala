@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.index.{IndexBuilder, PageSynth}
+import graft.index.{BigGazetteer, IndexBuilder, PageSynth}
 import graft.query.{Forward, Reverse}
 
 /** End-to-end geocode tests over the synthetic page corpus, mirroring the
@@ -149,6 +149,34 @@ class GeocodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dbg.exists(r => r._1 == "street" && r._2 == "west lake view rd"), s"got ${dbg.toSeq}")
     assert(dbg.exists(r => r._1 == "place" && r._2 == "englewood"), s"got ${dbg.toSeq}")
     assert(dbg.forall(r => r._3 > 0 && r._3 <= 1.0))
+  }
+
+  test("stats on and off return the same rows for plain, fuzzy, address and autocomplete queries") {
+    val sp = spark; import sp.implicits._
+    val n = 40
+    val gaz = BigGazetteer.buildIndex(spark, n)
+    def from(base: Long, df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("query_id", col("query_id") + base)
+    val prefixes = (0 until 6).map(i => (300L + i,
+      s"${BigGazetteer.streetName(2 * i)} ${BigGazetteer.placeName(i).take(5)}"))
+      .toDF("query_id", "query")
+    val queries = BigGazetteer.forwardQueries(spark, 8, n)
+      .unionByName(from(100, BigGazetteer.fuzzyQueries(spark, 6, n)))
+      .unionByName(from(200, BigGazetteer.addressQueries(spark, 6, n)))
+      .unionByName(prefixes)
+    def rows(stats: Option[Forward.GeocodeStats]) =
+      Forward.forward(spark, gaz, queries, stats = stats)
+        .select(col("query_id"), col("rank"), col("feature_id"),
+          col("place_name"), col("relev"))
+        .as[(Long, Int, Long, String, Double)].collect().toSeq
+        .sortBy(r => (r._1, r._2))
+    val st = new Forward.GeocodeStats()
+    val on = rows(Some(st))
+    val off = rows(None)
+    for (base <- Seq(0L, 100L, 200L, 300L))
+      assert(on.exists(r => r._1 >= base && r._1 < base + 100), s"no answer from $base: $on")
+    assert(on === off)
+    assert(st.counts("results") === on.length, s"$st")
   }
 
   test("batch forward geocode: many queries at once") {

@@ -78,7 +78,7 @@ class UnitPortsSpec extends AnyFunSuite {
   // --- whitespace.test.js --------------------------------------------------
   test("numbersPlusLetters matches reference") {
     def ws(tokens: String*): Option[Vector[String]] =
-      query.Forward.whitespaceCorrectQ(tq(tokens = tokens.toVector))
+      query.Phrasematch.whitespaceCorrectQ(tq(tokens = tokens.toVector))
         .map(_.tokens)
     assert(ws("100main", "st", "washington") ===
       Some(Vector("100 main", "st", "washington")))
