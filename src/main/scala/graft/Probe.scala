@@ -1,8 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.LongAdder
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
@@ -27,8 +28,11 @@ import graft.query.{Forward, Phrasematch, Reverse, Spatialmatch}
   *  - `ctx [cpus] [n]`: merged candidate table sizes, and plans and times of
   *    the candidate branches and the context-fill tile join (plans go to
   *    /tmp/ctxplans).
-  *  - `shuffle [cpus] [n]`: shuffle bytes, task CPU and allocation of one
-  *    forward() call.
+  *  - `shuffle [cpus] [n] [forward|reverse]`: one JSON line per Spark
+  *    stage of one warm forward() call over n queries (default) or
+  *    reverse() call over n points — tasks, wall, task CPU, shuffle read and
+  *    write, and the operators in the stage with their partition counts —
+  *    then the call's totals.
   *  - `stages forward|fuzzy|address [cpus] [n]`: warm and per-stage
   *    (`GeocodeStats`) times of one query set.
   * `cpus` defaults to 32. The BigGazetteer probes use
@@ -46,7 +50,7 @@ object Probe {
       case "dump-plans" => dumpPlans(rest(0), rest(1), rest.drop(2))
       case "pm" => pm(cpusAt(0), nAt(1, 2000))
       case "ctx" => ctx(cpusAt(0), nAt(1, 2000))
-      case "shuffle" => shuffle(cpusAt(0), nAt(1, 10000))
+      case "shuffle" => shuffle(cpusAt(0), nAt(1, 10000), rest.lift(2).getOrElse("forward"))
       case "stages" if rest.nonEmpty =>
         stages(rest(0), cpusAt(1), nAt(2, if (rest(0) == "forward") 2000 else 1000))
       case _ =>
@@ -209,25 +213,29 @@ object Probe {
     dump("ctx_candidates", cands.toDF())
   }
 
-  /** Shuffle bytes, task CPU and allocation summed over one warm forward()
-    * call. Unlike wall time these do not move with host load, so they are
-    * the A/B number for plan-shape changes.
+  /** Shuffle bytes, task CPU and allocation of one warm forward() or
+    * reverse() call: one JSON line per Spark stage the call ran, then one
+    * line summed over the call. Unlike wall time these do not move with host
+    * load, so they are the A/B number for plan-shape changes; the stage
+    * lines show each kernel's task count, and a kernel stage that runs twice
+    * in one call shows up twice.
     */
-  private def shuffle(cpus: String, nq: Int): Unit = withSession(cpus) { spark =>
+  private def shuffle(cpus: String, n: Int, workload: String): Unit = withSession(cpus) { spark =>
+    if (workload != "forward" && workload != "reverse")
+      sys.error(s"shuffle: unknown workload '$workload' (forward|reverse)")
     val index = bigIndex(spark)
-    val shufWrite, shufRead, cpuNs, tasks = new LongAdder
+    // collected, as a caller reads the answers: a count() would let the
+    // optimizer drop the final sort and its sampling job
+    def run(): Long = (
+      if (workload == "forward")
+        Forward.forward(spark, index, BigGazetteer.forwardQueries(spark, n, NPlaces))
+      else Reverse.reverse(spark, index, BigGazetteer.reversePoints(spark, n, NPlaces))
+    ).collect().length.toLong
+    val completed = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]
     val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          shufWrite.add(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.add(m.shuffleReadMetrics.totalBytesRead)
-          cpuNs.add(m.executorCpuTime)
-          tasks.increment()
-        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        completed.add(e.stageInfo)
     }
-    def run(): Long =
-      Forward.forward(spark, index, BigGazetteer.forwardQueries(spark, nq, NPlaces))
-        .count()
     run() // warm (codegen), unmeasured
 
     spark.sparkContext.addSparkListener(listener)
@@ -236,10 +244,27 @@ object Probe {
     val rows = run()
     val wall = (System.nanoTime() - t0) / 1e9
     val allocGb = (ScalingBench.allocatedBytes() - alloc0) / 1e9
-    // task-end events of a finished job reach the listener within
-    // milliseconds; wait before reading the adders
+    // stage-completed events of a finished job reach the listener within
+    // milliseconds; wait before reading the queue
     Thread.sleep(3000)
-    println(f"""{"metric":"forward_shuffle_probe","cpus":"$cpus","queries":$nq,"rows":$rows,"shuffle_write_mb":${shufWrite.sum / 1e6}%.1f,"shuffle_read_mb":${shufRead.sum / 1e6}%.1f,"task_cpu_sec":${cpuNs.sum / 1e9}%.1f,"tasks":${tasks.sum},"alloc_gb":$allocGb%.1f,"wall_sec":$wall%.1f}""")
+    spark.sparkContext.removeSparkListener(listener)
+    val done = completed.asScala.toVector.sortBy(si => (si.submissionTime.getOrElse(0L), si.stageId))
+    def metric(si: StageInfo)(f: TaskMetrics => Long): Long =
+      Option(si.taskMetrics).map(f).getOrElse(0L)
+    def str(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    done.foreach { si =>
+      // the physical operators the stage's RDDs were built under, in
+      // pipeline order, each with its RDD's partition count: a per-query
+      // kernel lists "MapGroups:<partitions>", also when it shares its
+      // stage with a union
+      val ops = si.rddInfos.sortBy(_.id)
+        .flatMap(r => r.scope.map(sc => s"${sc.name}:${r.numPartitions}")).distinct
+      val wallMs = (for (a <- si.submissionTime; b <- si.completionTime) yield b - a)
+        .getOrElse(0L)
+      println(f"""{"metric":"shuffle_probe_stage","workload":"$workload","stage":${si.stageId},"attempt":${si.attemptNumber()},"tasks":${si.numTasks},"wall_ms":$wallMs,"task_cpu_sec":${metric(si)(_.executorCpuTime) / 1e9}%.3f,"shuffle_read_mb":${metric(si)(_.shuffleReadMetrics.totalBytesRead) / 1e6}%.3f,"shuffle_write_mb":${metric(si)(_.shuffleWriteMetrics.bytesWritten) / 1e6}%.3f,"name":${str(si.name)},"ops":${ops.map(str).mkString("[", ",", "]")}}""")
+    }
+    def sum(f: TaskMetrics => Long) = done.map(metric(_)(f)).sum
+    println(f"""{"metric":"${workload}_shuffle_probe","cpus":"$cpus","queries":$n,"rows":$rows,"stages":${done.length},"shuffle_write_mb":${sum(_.shuffleWriteMetrics.bytesWritten) / 1e6}%.1f,"shuffle_read_mb":${sum(_.shuffleReadMetrics.totalBytesRead) / 1e6}%.1f,"task_cpu_sec":${sum(_.executorCpuTime) / 1e9}%.1f,"tasks":${done.map(_.numTasks).sum},"alloc_gb":$allocGb%.1f,"wall_sec":$wall%.1f}""")
   }
 
   /** One query set: an unmeasured warm-up, a timed warm run, then a stats

@@ -100,7 +100,7 @@ object ScalingBench {
     }
     geocode(NQueries, None)
     // timed run is the PRODUCTION path (stats off): the O3 stats surface
-    // adds two localCheckpoint barriers per forward() for honest stage
+    // adds a pm_join localCheckpoint barrier per forward() for honest stage
     // attribution, which is measurement overhead, not engine throughput.
     // The allocation delta tests whether the stage is bound by the same
     // memory-bandwidth ceiling as ingest (same-rate allocation at 8 and

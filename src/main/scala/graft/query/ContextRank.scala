@@ -184,12 +184,12 @@ object ContextRank {
       matchedDf = Some(matchedSets), allowedIdxs = Some(call.wvIdxs))
     val metaDs = leadMeta.select(col("query_id"), col("sub"),
       col("lead_idx"), col("maxtype")).as[CtxMeta]
-    val ctxStacked = ctxCands
+    val ctxPaired = ctxCands
       .joinWith(metaDs, ctxCands("query_id") === metaDs("query_id") &&
         ctxCands("sub") === metaDs("sub"))
       .filter(p => p._1.idx < byNameFirstIdx.getOrElse(p._2.lead_idx, p._2.lead_idx))
-      .groupByKey(p => (p._1.query_id, p._1.sub))
-      .flatMapGroups { (key: (Long, Int), it) =>
+    val ctxStacked = PerQuery.kernel(ctxPaired, "_1.query_id", "_1.sub") {
+        (key: (Long, Int), it: Iterator[(Reverse.CandRow, CtxMeta)]) =>
         val (qid, pos) = key
         val v = it.toVector
         val maxtype = v.head._2.maxtype
@@ -242,7 +242,8 @@ object ContextRank {
     val layersBc = call.layersBc
     // hard cap 10 (reference geocode.js:340)
     val limit = math.min(opts.limit, 10)
-    val finals = tagged.groupByKey(_.query_id).flatMapGroups { (qid, it) =>
+    val finals = PerQuery.kernel(tagged, "query_id") {
+        (qid: Long, it: Iterator[VRowT]) =>
       val (cfgs, ndxs) = layersBc.value
       // idx-keyed config lookups, built once per query group (not
       // collectFirst per row)
@@ -504,13 +505,15 @@ object ContextRank {
       }
     }
 
-    val out = finals.toDF()
-      .select(col("query_id"), col("rank"), col("relev"), col("scoredist"),
-        col("place_name"), col("feature_id"), col("center_lon"),
-        col("center_lat"), col("lead_idx"), col("matching_text"),
-        col("routable_points"), col("place_type"), col("place_names"),
-        col("matching_place_name"))
-      .orderBy(col("query_id"), col("rank"))
-    call.barrier("context_rank", count = "results", statsOnly = true)(out)
+    // materialized before the sort: the range partitioner's sampling job
+    // then reads the checkpoint instead of running the kernel a second time
+    call.barrier("context_rank", count = "results") {
+      finals.toDF()
+        .select(col("query_id"), col("rank"), col("relev"), col("scoredist"),
+          col("place_name"), col("feature_id"), col("center_lon"),
+          col("center_lat"), col("lead_idx"), col("matching_text"),
+          col("routable_points"), col("place_type"), col("place_names"),
+          col("matching_place_name"))
+    }.orderBy(col("query_id"), col("rank"))
   }
 }

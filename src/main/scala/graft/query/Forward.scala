@@ -243,7 +243,7 @@ object Forward {
     val matched = Phrasematch.joins(index, call.searchIndex, subs,
       opts.autocomplete, opts.fuzzy)
     val results = Spatialmatch.run(call,
-      Spatialmatch.pmRows(index, opts.language, matched))
+      Spatialmatch.pmRows(index, call.requestedLangs.headOption, matched))
     val covers = Spatialmatch.covers(results)
     ContextRank.run(call, covers, Verifymatch.run(call, covers))
   }

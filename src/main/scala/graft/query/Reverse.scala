@@ -410,7 +410,8 @@ object Reverse {
     val stackO = StackOpts(types = opts.types, scoreMode = scoreMode,
       full = true)
     val cap = vtqueryCap(distanceMode)
-    val stacked = cands.groupByKey(_.query_id).flatMapGroups { (_, it) =>
+    val stacked = PerQuery.kernel(cands, "query_id") {
+        (_: Long, it: Iterator[CandRow]) =>
       val rows = it.toVector
       val picks = rows.groupBy(_.idx).toVector.sortBy(_._1)
         .flatMap { case (idx, rs) =>
@@ -421,7 +422,9 @@ object Reverse {
       stackContexts(picks, optsB, stackO).iterator
     }.toDF()
 
-    snapAddresses(spark, index, stacked, pts)
+    // materialized once before the sort: the range partitioner's sampling
+    // job then reads the checkpoint instead of running the kernel again
+    snapAddresses(spark, index, stacked, pts).localCheckpoint()
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -689,9 +692,8 @@ object Reverse {
       scoreMode = false, full = true)
     val paired = cands.joinWith(metaDs,
       cands("query_id") === metaDs("query_id") && cands("sub") === metaDs("sub"))
-    val perTarget = paired
-      .groupByKey(p => (p._1.query_id, p._1.sub))
-      .flatMapGroups { (_: (Long, Int), it) =>
+    val perTarget = PerQuery.kernel(paired, "_1.query_id", "_1.sub") {
+        (_: (Long, Int), it: Iterator[(CandRow, TargetMeta)]) =>
         val v = it.toVector
         val meta = v.head._2
         val rows = v.map(_._1)

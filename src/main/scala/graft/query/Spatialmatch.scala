@@ -82,7 +82,8 @@ object Spatialmatch {
   private[graft] def pmRows(index: CarmenIndex, language: Option[String],
                             matched: DataFrame): DataFrame = {
     // language target per layer (reference phrasematch.js:297-310): the
-    // requested language resolves to the layer's closest configured label,
+    // first requested language (the one verify and format read, not the
+    // whole "en,es" list) resolves to the layer's closest configured label,
     // else "unmatched"; grids tagged with other languages take the x0.96
     // coalesce penalty
     val langTargetByLayer: Map[String, String] = {
@@ -150,7 +151,8 @@ object Spatialmatch {
     val proximity = opts.proximity
     val smStackLimit = opts.spatialmatchStackLimit
 
-    val results = pms.groupByKey(_.queryId).flatMapGroups { (qid, it) =>
+    val results = PerQuery.kernel(pms, "queryId") {
+        (qid: Long, it: Iterator[PmPhraseRow]) =>
       val (cfgs, ndxs) = layersBc.value
       // idx-keyed layer-name lookup, built once per query group (no
       // collectFirst scan per cover row)

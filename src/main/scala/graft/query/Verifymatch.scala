@@ -569,7 +569,8 @@ object Verifymatch {
       // V14: the feature-phase chunk machine replays per query over the
       // batch-loaded candidates, emitting only the verified leads (at most
       // stackLimit) that context fill + re-rank run on
-      resolved.groupByKey(_.out.query_id).flatMapGroups { (_, it) =>
+      PerQuery.kernel(resolved, "out.query_id") {
+          (_: Long, it: Iterator[LeadCand]) =>
         val (cfgs, _) = layersBc.value
         val cfgByIdxA: Map[Int, (String, LayerConfig)] =
           cfgs.map { case (name, (c, _)) => c.idx -> ((name, c)) }

@@ -151,19 +151,29 @@ class GeocodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dbg.forall(r => r._3 > 0 && r._3 <= 1.0))
   }
 
-  test("stats on and off return the same rows for plain, fuzzy, address and autocomplete queries") {
+  private val gazPlaces = 40
+  private lazy val gaz = BigGazetteer.buildIndex(spark, gazPlaces)
+
+  /** 26 queries over [[gaz]] in four id ranges: plain (0..), fuzzy (100..),
+    * address (200..) and autocomplete prefixes (300..).
+    */
+  private def gazQueries(): org.apache.spark.sql.DataFrame = {
     val sp = spark; import sp.implicits._
-    val n = 40
-    val gaz = BigGazetteer.buildIndex(spark, n)
+    val n = gazPlaces
     def from(base: Long, df: org.apache.spark.sql.DataFrame) =
       df.withColumn("query_id", col("query_id") + base)
     val prefixes = (0 until 6).map(i => (300L + i,
       s"${BigGazetteer.streetName(2 * i)} ${BigGazetteer.placeName(i).take(5)}"))
       .toDF("query_id", "query")
-    val queries = BigGazetteer.forwardQueries(spark, 8, n)
+    BigGazetteer.forwardQueries(spark, 8, n)
       .unionByName(from(100, BigGazetteer.fuzzyQueries(spark, 6, n)))
       .unionByName(from(200, BigGazetteer.addressQueries(spark, 6, n)))
       .unionByName(prefixes)
+  }
+
+  test("stats on and off return the same rows for plain, fuzzy, address and autocomplete queries") {
+    val sp = spark; import sp.implicits._
+    val queries = gazQueries()
     def rows(stats: Option[Forward.GeocodeStats]) =
       Forward.forward(spark, gaz, queries, stats = stats)
         .select(col("query_id"), col("rank"), col("feature_id"),
@@ -177,6 +187,22 @@ class GeocodeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(on.exists(r => r._1 >= base && r._1 < base + 100), s"no answer from $base: $on")
     assert(on === off)
     assert(st.counts("results") === on.length, s"$st")
+  }
+
+  test("forward and reverse return rows sorted by (query_id, rank) over a multi-partition batch") {
+    val sp = spark; import sp.implicits._
+    def keys(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
+      df.select(col("query_id"), col("rank")).as[(Long, Int)].collect().toSeq
+    val queries = gazQueries()
+    assert(queries.rdd.getNumPartitions > 1)
+    val fwd = keys(Forward.forward(spark, gaz, queries))
+    assert(fwd.map(_._1).distinct.length > 20, s"$fwd")
+    assert(fwd === fwd.sorted, s"$fwd")
+    val points = BigGazetteer.reversePoints(spark, 200, gazPlaces)
+    assert(points.rdd.getNumPartitions > 1)
+    val rev = keys(Reverse.reverse(spark, gaz, points))
+    assert(rev.map(_._1).distinct.length === 200, s"$rev")
+    assert(rev === rev.sorted, s"$rev")
   }
 
   test("batch forward geocode: many queries at once") {

@@ -35,7 +35,9 @@ class LanguageAcceptanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       (LayerConfig("place", idx = 1, zoom = 6, typ = "place",
         languages = Seq("en", "es")),
         docs(GeoDoc(1, "new york", 1, poly, 0, 0,
-          langTexts = Map("es" -> "nueva york"))))))
+          langTexts = Map("es" -> "nueva york")),
+          GeoDoc(2, "London", 1, poly, 0, 0,
+            langTexts = Map("en" -> "London", "es" -> "Londres"))))))
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -81,6 +83,15 @@ class LanguageAcceptanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = fw("nueva york", Some("en"))
     assert(res.nonEmpty, s"got $res")
     assert(res.head._2 === 1.0, s"en query rides the es fill: $res")
+  }
+
+  test("language list en,es: the first requested language sets the phrase language") {
+    // "london" is an en phrase of an en/es layer, so an "en,es" request
+    // matches it as fully as "en" does
+    for (language <- Seq("en", "en,es")) {
+      val res = fw("london", Some(language))
+      assert(res.nonEmpty && res.head._2 === 1.0, s"$language: $res")
+    }
   }
 
   private def fwStrict(q: String, language: String): Seq[(Int, Double, String)] = {

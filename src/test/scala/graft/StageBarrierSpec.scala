@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The forward stages materialize only through `Forward.Call.barrier`, so
-  * the per-call materialization policy has one place to change.
+/** The forward stages materialize only through `Forward.Call.barrier`, and
+  * the per-query kernels of `graft.query` group only through
+  * `PerQuery.kernel`, so the per-call materialization policy and the kernel
+  * partitioning rule each have one place to change.
   */
 class StageBarrierSpec extends AnyFunSuite {
   private val stageFiles =
@@ -20,20 +22,43 @@ class StageBarrierSpec extends AnyFunSuite {
       else l.replaceAll("//.*$", "")
     }
 
+  /** The 0-based line range, exclusive, of the body of the definition
+    * whose line contains `header`: up to the next line indented no deeper.
+    */
+  private def body(lines: Vector[String], header: String): (Int, Int) = {
+    val start = lines.indexWhere(_.contains(header))
+    assert(start >= 0, s"no line contains '$header'")
+    val indent = lines(start).takeWhile(_ == ' ').length
+    val end = lines.indexWhere(l =>
+      l.trim.nonEmpty && l.takeWhile(_ == ' ').length <= indent, start + 1)
+    (start, end)
+  }
+
   test("localCheckpoint appears in the forward stage files only inside the barrier helper") {
     val hits = for {
       f <- stageFiles
       (l, i) <- code(f).zipWithIndex if l.contains("localCheckpoint")
     } yield (f.getFileName.toString, i)
-    val fwd = code(stageFiles.head)
-    val start = fwd.indexWhere(_.contains("def barrier("))
-    assert(start >= 0, "Forward.scala defines the barrier helper")
-    val indent = fwd(start).takeWhile(_ == ' ').length
-    val end = fwd.indexWhere(l =>
-      l.trim.nonEmpty && l.takeWhile(_ == ' ').length <= indent, start + 1)
+    val (start, end) = body(code(stageFiles.head), "def barrier(")
     assert(hits.nonEmpty)
     assert(hits.forall { case (file, i) =>
       file == "Forward.scala" && i > start && i < end
     }, s"localCheckpoint outside the barrier (file, 0-based line): $hits")
+  }
+
+  test("groupByKey and flatMapGroups appear in graft.query only inside the per-query kernel helper") {
+    val grouping = "\\b(groupByKey|flatMapGroups|mapGroups)\\b".r
+    val queryFiles = Files.list(Paths.get("src/main/scala/graft/query")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toVector.sortBy(_.toString)
+    val hits = for {
+      f <- queryFiles
+      (l, i) <- code(f).zipWithIndex if grouping.findFirstIn(l).isDefined
+    } yield (f.getFileName.toString, i)
+    val helper = Paths.get("src/main/scala/graft/query/PerQuery.scala")
+    val (start, end) = body(code(helper), "def kernel[")
+    assert(hits.nonEmpty)
+    assert(hits.forall { case (file, i) =>
+      file == "PerQuery.scala" && i >= start && i < end
+    }, s"grouping outside PerQuery.kernel (file, 0-based line): $hits")
   }
 }
