@@ -5,7 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import graft.index.{BigGazetteer, PageSynth}
 import graft.index.IndexBuilder.CarmenIndex
@@ -32,7 +37,10 @@ import graft.query.{Forward, Phrasematch, Reverse, Spatialmatch}
   *    stage of one warm forward() call over n queries (default) or
   *    reverse() call over n points — tasks, wall, task CPU, shuffle read and
   *    write, and the operators in the stage with their partition counts —
-  *    then the call's totals.
+  *    then one line per SQL action of the call (each barrier's
+  *    localCheckpoint, the final collect): its joins with their build
+  *    side, each broadcast's rows, bytes and build time, and each
+  *    exchange's origin, partitions and bytes; then the call's totals.
   *  - `stages forward|fuzzy|address [cpus] [n]`: warm and per-stage
   *    (`GeocodeStats`) times of one query set.
   * `cpus` defaults to 32. The BigGazetteer probes use
@@ -208,9 +216,46 @@ object Probe {
     val leadPts = BigGazetteer.reversePoints(spark, nq, NPlaces)
       .select(col("query_id"), lit(1).as("sub"), col("lon"), col("lat"))
     val cands = Reverse.candidates(leadPts, index,
-      distanceMode = false, radiusMiles = 0.0, None, None)
+      distanceMode = false, radiusMiles = 0.0)
     time("ctx_candidates")(println(s"  rows=${cands.count()}"))
     dump("ctx_candidates", cands.toDF())
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** One SQL action of a measured call as a JSON line: every join with its
+    * build side (and, for a broadcast hash join, the rows of the relation
+    * it builds), every broadcast and every shuffle exchange in the final
+    * (AQE) plan, and the number of per-query kernels (`MapGroups`).
+    */
+  private def actionLine(workload: String, seq: Int, func: String,
+                         qe: QueryExecution, durationNs: Long): String = {
+    val plan = qe.executedPlan
+    def metric(p: SparkPlan, key: String): Long =
+      p.metrics.get(key).map(_.value).getOrElse(0L)
+    def broadcastRows(side: SparkPlan): Long =
+      PlanWalk.collectFirst(side) { case b: BroadcastExchangeExec =>
+        metric(b, "numOutputRows") }.getOrElse(-1L)
+    def join(kind: String, joinType: Any, build: String, buildRows: Long = -1L) =
+      s"""{"kind":"$kind","type":"$joinType","build":"$build"""" +
+        (if (buildRows >= 0) s""","build_rows":$buildRows}""" else "}")
+    val joins = PlanWalk.collect(plan) {
+      case j: BroadcastHashJoinExec =>
+        val side = if (j.buildSide == BuildLeft) j.left else j.right
+        join("BroadcastHashJoin", j.joinType, j.buildSide.toString, broadcastRows(side))
+      case j: ShuffledHashJoinExec => join("ShuffledHashJoin", j.joinType, j.buildSide.toString)
+      case j: SortMergeJoinExec => join("SortMergeJoin", j.joinType, "none")
+      case j: BroadcastNestedLoopJoinExec =>
+        join("BroadcastNestedLoopJoin", j.joinType, j.buildSide.toString)
+    }
+    val broadcasts = PlanWalk.collect(plan) { case b: BroadcastExchangeExec =>
+      f"""{"rows":${metric(b, "numOutputRows")},"mb":${metric(b, "dataSize") / 1e6}%.1f,"build_ms":${metric(b, "buildTime")},"collect_ms":${metric(b, "collectTime")}}"""
+    }
+    val exchanges = PlanWalk.collect(plan) { case s: ShuffleExchangeExec =>
+      f"""{"origin":"${s.shuffleOrigin}","partitions":${s.numPartitions},"mb":${metric(s, "dataSize") / 1e6}%.3f}"""
+    }
+    val kernels = PlanWalk.collect(plan) { case p if p.nodeName == "MapGroups" => p }.size
+    f"""{"metric":"shuffle_probe_action","workload":"$workload","seq":$seq,"action":"$func","ms":${durationNs / 1e6}%.0f,"kernels":$kernels,"joins":${joins.mkString("[", ",", "]")},"broadcasts":${broadcasts.mkString("[", ",", "]")},"exchanges":${exchanges.mkString("[", ",", "]")}}"""
   }
 
   /** Shuffle bytes, task CPU and allocation of one warm forward() or
@@ -236,9 +281,16 @@ object Probe {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         completed.add(e.stageInfo)
     }
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution, Long)]
+    val actionListener = new QueryExecutionListener {
+      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        actions.add((func, qe, ns))
+      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
     run() // warm (codegen), unmeasured
 
     spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(actionListener)
     val alloc0 = ScalingBench.allocatedBytes()
     val t0 = System.nanoTime()
     val rows = run()
@@ -248,6 +300,7 @@ object Probe {
     // milliseconds; wait before reading the queue
     Thread.sleep(3000)
     spark.sparkContext.removeSparkListener(listener)
+    spark.listenerManager.unregister(actionListener)
     val done = completed.asScala.toVector.sortBy(si => (si.submissionTime.getOrElse(0L), si.stageId))
     def metric(si: StageInfo)(f: TaskMetrics => Long): Long =
       Option(si.taskMetrics).map(f).getOrElse(0L)
@@ -262,6 +315,9 @@ object Probe {
       val wallMs = (for (a <- si.submissionTime; b <- si.completionTime) yield b - a)
         .getOrElse(0L)
       println(f"""{"metric":"shuffle_probe_stage","workload":"$workload","stage":${si.stageId},"attempt":${si.attemptNumber()},"tasks":${si.numTasks},"wall_ms":$wallMs,"task_cpu_sec":${metric(si)(_.executorCpuTime) / 1e9}%.3f,"shuffle_read_mb":${metric(si)(_.shuffleReadMetrics.totalBytesRead) / 1e6}%.3f,"shuffle_write_mb":${metric(si)(_.shuffleWriteMetrics.bytesWritten) / 1e6}%.3f,"name":${str(si.name)},"ops":${ops.map(str).mkString("[", ",", "]")}}""")
+    }
+    actions.asScala.zipWithIndex.foreach { case ((func, qe, ns), i) =>
+      println(actionLine(workload, i + 1, func, qe, ns))
     }
     def sum(f: TaskMetrics => Long) = done.map(metric(_)(f)).sum
     println(f"""{"metric":"${workload}_shuffle_probe","cpus":"$cpus","queries":$n,"rows":$rows,"stages":${done.length},"shuffle_write_mb":${sum(_.shuffleWriteMetrics.bytesWritten) / 1e6}%.1f,"shuffle_read_mb":${sum(_.shuffleReadMetrics.totalBytesRead) / 1e6}%.1f,"task_cpu_sec":${sum(_.executorCpuTime) / 1e9}%.1f,"tasks":${done.map(_.numTasks).sum},"alloc_gb":$allocGb%.1f,"wall_sec":$wall%.1f}""")

@@ -246,4 +246,12 @@ object ClosestLang {
         (text, outLang)
     }
   }
+
+  /** The display text of a feature: [[getText]] over its `carmen:text`
+    * and its `carmen:text_{lang}` texts (keys in sorted order).
+    */
+  def displayText(language: Option[String], text: String,
+                  langTexts: Map[String, String]): String =
+    getText(language, ("carmen:text" -> text) +: langTexts.toVector
+      .sortBy(_._1).map { case (k, v) => ("carmen:text_" + k) -> v })._1
 }

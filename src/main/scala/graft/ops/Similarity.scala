@@ -275,10 +275,6 @@ object Similarity {
       out
     })
     val vecs = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      // spread the single-split source scan across cores BEFORE the
-      // normalize/signature kernels (a small single parquet file otherwise
-      // pins the whole per-vector compute to one task)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("id"))
       .withColumn("vn", normalizeUdf(col("v")))
       .localCheckpoint()
     val n = vecs.count()

@@ -6,49 +6,31 @@ import graft.core._
 import graft.model._
 
 /** Context assembly and re-rank (reference verifymatch.js:264-331,
-  * 542-548, context.js, format-features.js): each verified lead's context
-  * stack through [[Reverse.candidates]], then the per-query context-phase
-  * chunk machine, strict/loose re-rank, dedupe and formatting.
+  * 542-548, context.js, format-features.js) in one per-query kernel: each
+  * verified lead's context stack out of the [[Reverse.candidates]] tile
+  * lookup at its center, then the per-query context-phase chunk machine,
+  * strict/loose re-rank, dedupe and formatting.
   */
 object ContextRank {
 
   // reference lib/constants.js:23-25
   val MaxContextsLimit = 20       // max contexts loaded to get limitVerify good ones
 
-  /** Tagged row feeding the per-query verify re-rank (kind: 0=cover,
-    * 1=context feature, 2=lead feature, 3=loose-sets cover — the best
-    * cover per tmpid over ALL spatialmatches, spatialmatch.js:64-68). */
-  final case class VRowT(query_id: Long, position: Int, kind: Int, tmpid: Long,
-                         idx: Int, mask: Int, relev: Double, text: String,
-                         zoom: Int, smRelev: Double, scoredist: Double,
-                         featureId: Long, lon: Double, lat: Double,
-                         display: String, number: String,
-                         fullText: String, fscore: Double,
-                         addressPos: Int, fromCluster: Boolean,
-                         interpolated: Boolean, omitted: Boolean,
-                         pos: Int, matchingText: String,
-                         overrides: Map[String, String], langOk: Boolean,
-                         routablePoints: String,
-                         langTexts: Map[String, String],
-                         // matched-grid phrase hash (covers/sets rows; 0
-                         // elsewhere) for matching-text recovery
-                         phraseHash: Int,
-                         // context claimed type + stack order (R8); lead
-                         // carmen:types array (kind 2)
-                         ctyp: String, corder: Int, allTypes: Seq[String],
-                         // kind 2 only: verified order + carmen:position
-                         vorder: Int, cpos: Int)
+  /** The kernel input, keyed on `query_id`: exactly one part is set — a
+    * spatialmatch result (rank 0 is the loose `sets` row), a verified lead,
+    * or a context-fill tile candidate at a lead's center (`sub` is the
+    * lead's position).
+    */
+  final case class QueryPart(query_id: Long, result: Spatialmatch.ResultRow,
+                             lead: Verifymatch.LeadOut, cand: Reverse.CandRow)
 
-  /** Per-lead context-fill meta (maxidx source + maxtype). */
-  final case class CtxMeta(query_id: Long, sub: Int, lead_idx: Int,
-                           maxtype: String)
-
-  /** One stacked context element out of the R8 kernel. */
-  final case class CtxOut(query_id: Long, position: Int, idx: Int,
-                          feature_id: Long, text: String, score: Double,
-                          center_lon: Double, center_lat: Double,
-                          lang_texts: Map[String, String], ctyp: String,
-                          corder: Int)
+  /** One stacked context element of a lead: its claimed type (R8) and the
+    * text the re-rank and the formatter read.
+    */
+  private final case class Ctx(tmpid: Long, idx: Int, display: String,
+                               fullText: String, fscore: Double,
+                               featureId: Long, langTexts: Map[String, String],
+                               ctyp: String)
 
   final case class FinalRow(query_id: Long, rank: Int, relev: Double,
                             scoredist: Double, place_name: String,
@@ -78,159 +60,57 @@ object ContextRank {
                         // each member's matched synonym
                         matchingPlaceName: String = "")
 
-  /** The formatted, ranked forward output of the spatialmatch
-    * [[Spatialmatch.covers]] and the [[Verifymatch]] leads.
+  /** The first synonym of a comma-joined text with U+0020 stripped from
+    * both ends — Spark's `trim(substring_index(text, ",", 1))`, which
+    * `String.trim` (every char <= U+0020) is not.
     */
-  private[query] def run(call: Forward.Call, covers: DataFrame,
+  private def firstSynonym(text: String): String = {
+    val comma = text.indexOf(',')
+    val first = if (comma < 0) text else text.substring(0, comma)
+    var s = 0
+    var e = first.length
+    while (s < e && first.charAt(s) == ' ') s += 1
+    while (e > s && first.charAt(e - 1) == ' ') e -= 1
+    first.substring(s, e)
+  }
+
+  /** The formatted, ranked forward output of the spatialmatch `results`
+    * ([[Spatialmatch.run]]) and the [[Verifymatch]] leads.
+    */
+  private[query] def run(call: Forward.Call, results: DataFrame,
                          leadOut: DataFrame): DataFrame = {
     val spark = call.spark
     import spark.implicits._
     val index = call.index
     val opts = call.opts
-    val leadRows = leadOut.select(col("query_id"), col("position"), col("kind"),
-      col("tmpid"), col("idx"), col("mask"), col("relev"), col("text"),
-      col("zoom"), col("smRelev"), col("scoredist"), col("featureId"),
-      col("lon"), col("lat"), col("display"), col("number"),
-      col("fullText"), col("fscore"), col("addressPos"), col("fromCluster"),
-      col("interpolated"), col("omitted"), lit(0).as("pos"),
-      col("matchingText"), col("overrides"), col("langOk"),
-      col("routablePoints"), col("langTexts"), lit(0).as("phraseHash"),
-      lit("").as("ctyp"), lit(0).as("corder"), col("leadTypes").as("allTypes"),
-      col("vorder"), col("cpos"))
+    // context fill: reverse lookup of every verified lead's center in the
+    // layers it may take context from (R4/R5)
+    val cands = Reverse.candidates(
+      leadOut.select(col("query_id"), col("position").as("sub"), col("lon"),
+        col("lat")),
+      index, distanceMode = false, radiusMiles = 0.0,
+      allowedIdxs = Some(call.wvIdxs)).toDF()
+    // one row type keyed on query_id: each input fills its own part, the
+    // other parts are typed nulls
+    val inputs = Seq(("result", results, "queryId"),
+      ("lead", leadOut, "query_id"), ("cand", cands, "query_id"))
+    val parts = inputs.map { case (name, df, qid) =>
+      df.select(col(qid).as("query_id") +: inputs.map { case (n, d, _) =>
+        (if (n == name) struct(d.columns.map(col): _*)
+         else lit(null).cast(d.schema)).as(n)
+      }: _*)
+    }.reduce(_ unionByName _).as[QueryPart]
 
-    // cover rows (kind 0); the pos==0 cover takes the street-fallback
-    // penalty when its address number failed to resolve
-    // inner join against the VERIFIED positions: covers travel to the
-    // re-rank only for candidates the feature phase kept
-    val penalties = leadOut.select(col("query_id"), col("position"),
-      col("addrPenalty"))
-    val coverRows = covers.where(col("position") >= 1)
-      .join(penalties, Seq("query_id", "position"), "inner")
-      .select(col("query_id"), col("position"),
-      lit(0).as("kind"), col("tmpid"), col("idx"), col("mask"),
-      when(col("pos") === 0 && coalesce(col("addrPenalty"), lit(false)),
-        col("relev") * 0.99).otherwise(col("relev")).as("relev"),
-      col("text"), col("zoom"), col("smRelev"), col("scoredist"),
-      lit(-1L).as("featureId"), lit(0.0).as("lon"), lit(0.0).as("lat"),
-      lit("").as("display"), lit("").as("number"),
-      lit("").as("fullText"), lit(0.0).as("fscore"),
-      lit(-1).as("addressPos"), lit(false).as("fromCluster"),
-      lit(false).as("interpolated"), lit(false).as("omitted"),
-      col("pos"), lit("").as("matchingText"),
-      map().cast("map<string,string>").as("overrides"), lit(true).as("langOk"),
-      lit("").as("routablePoints"),
-      map().cast("map<string,string>").as("langTexts"),
-      col("phraseHash"),
-      lit("").as("ctyp"), lit(0).as("corder"),
-      lit(array()).cast("array<string>").as("allTypes"),
-      lit(0).as("vorder"), lit(0).as("cpos"))
-
-    // loose-sets rows (kind 3): the rank-0 best-cover-per-tmpid list —
-    // the reference's matched.sets, consumed by the loose verify pass
-    val setsRows = covers.where(col("position") === 0)
-      .select(col("query_id"), col("position"),
-      lit(3).as("kind"), col("tmpid"), col("idx"), col("mask"),
-      col("relev"), col("text"), col("zoom"), col("smRelev"),
-      col("scoredist"),
-      lit(-1L).as("featureId"), lit(0.0).as("lon"), lit(0.0).as("lat"),
-      lit("").as("display"), lit("").as("number"),
-      lit("").as("fullText"), lit(0.0).as("fscore"),
-      lit(-1).as("addressPos"), lit(false).as("fromCluster"),
-      lit(false).as("interpolated"), lit(false).as("omitted"),
-      col("pos"), lit("").as("matchingText"),
-      map().cast("map<string,string>").as("overrides"), lit(true).as("langOk"),
-      lit("").as("routablePoints"),
-      map().cast("map<string,string>").as("langTexts"),
-      col("phraseHash"),
-      lit("").as("ctyp"), lit(0).as("corder"),
-      lit(array()).cast("array<string>").as("allTypes"),
-      lit(0).as("vorder"), lit(0).as("cpos"))
-
-    // context rows (kind 1): reverse-lookup of the lead center in every
-    // layer coarser than the lead's name-group firstidx (maxidx,
-    // verifymatch.js:542-548), stacked with the FULL stackFeatures
-    // semantics — forward-phrasematch priority from the query's cover sets
-    // (R4/R5), carmen:conflict keys, maxtype exclusion and multi-type
-    // shifting (R8, context.js:116-254).
-    // O1: context display text is language-selected (format-features.js:93).
+    // O1: context display text is language-selected (format-features.js:93)
     val requestedLangs = call.requestedLangs
     val language = requestedLangs.headOption
-    val langSelUdf = udf((text: String, langTexts: Map[String, String]) =>
-      ClosestLang.getText(language,
-        ("carmen:text" -> text) +: langTexts.toVector.sortBy(_._1)
-          .map { case (k, v) => ("carmen:text_" + k, v) })._1)
-    val ctxDisplay =
-      if (language.isEmpty) trim(substring_index(col("text"), ",", 1))
-      else langSelUdf(col("text"),
-        coalesce(col("lang_texts"), map().cast("map<string,string>")))
-    // matched sets: every verified cover tmpid of the query (the reference's
-    // `sets` — approximated by the top-limitVerify results' covers, the
-    // same documented equivalence as V1/V14)
-    val matchedSets = covers.select(col("query_id"), col("tmpid")).distinct()
+    // maxidx (verifymatch.js:542-548): context comes from layers coarser
+    // than the lead's name-group firstidx
     val byNameFirstIdx: Map[Int, Int] = {
       val byName = index.layers.groupBy(_.config.gname)
       index.layers.map(l =>
         l.config.idx -> byName(l.config.gname).map(_.config.idx).min).toMap
     }
-    val leadMeta = call.barrier("context_rank") {
-      leadRows.where(col("kind") === 2)
-        .select(col("query_id"), col("position").as("sub"),
-          col("idx").as("lead_idx"), col("lon"), col("lat"),
-          coalesce(element_at(col("allTypes"), -1), lit("")).as("maxtype"))
-    }
-    val ctxCands = Reverse.candidates(
-      leadMeta.select(col("query_id"), col("sub"), col("lon"), col("lat")),
-      index, distanceMode = false, radiusMiles = 0.0,
-      matchedDf = Some(matchedSets), allowedIdxs = Some(call.wvIdxs))
-    val metaDs = leadMeta.select(col("query_id"), col("sub"),
-      col("lead_idx"), col("maxtype")).as[CtxMeta]
-    val ctxPaired = ctxCands
-      .joinWith(metaDs, ctxCands("query_id") === metaDs("query_id") &&
-        ctxCands("sub") === metaDs("sub"))
-      .filter(p => p._1.idx < byNameFirstIdx.getOrElse(p._2.lead_idx, p._2.lead_idx))
-    val ctxStacked = PerQuery.kernel(ctxPaired, "_1.query_id", "_1.sub") {
-        (key: (Long, Int), it: Iterator[(Reverse.CandRow, CtxMeta)]) =>
-        val (qid, pos) = key
-        val v = it.toVector
-        val maxtype = v.head._2.maxtype
-        val rows = v.map(_._1)
-        val picks = rows.groupBy(_.idx).toVector.sortBy(_._1)
-          .flatMap { case (_, rs) =>
-            Reverse.pickPerIdx(Reverse.rankCap(rs, Reverse.ContextModeLimit),
-              scoreMode = false, scoreModeEnabled = false, None, None)
-          }
-        Reverse.stackMemo(picks, Reverse.StackOpts(maxtype = maxtype))
-          .map(s => CtxOut(qid, pos, s.cand.idx, s.cand.feature_id,
-            s.cand.text, s.cand.score, s.cand.center_lon, s.cand.center_lat,
-            s.cand.langTexts, s.claimedType, s.order)).iterator
-      }.toDF()
-    val contextRows = ctxStacked
-        .select(col("query_id"), col("position"), lit(1).as("kind"),
-          (col("idx").cast("long") * (1L << 25) +
-            pmod(abs(col("feature_id")), lit(1L << 24))).as("tmpid"),
-          col("idx"), lit(0).as("mask"), lit(0.0).as("relev"),
-          col("text"), lit(0).as("zoom"), lit(0.0).as("smRelev"),
-          lit(0.0).as("scoredist"), col("feature_id").as("featureId"),
-          col("center_lon").as("lon"), col("center_lat").as("lat"),
-          ctxDisplay.as("display"),
-          lit("").as("number"), col("text").as("fullText"),
-          col("score").as("fscore"),
-          lit(-1).as("addressPos"), lit(false).as("fromCluster"),
-          lit(false).as("interpolated"), lit(false).as("omitted"),
-          lit(0).as("pos"), lit("").as("matchingText"),
-          map().cast("map<string,string>").as("overrides"),
-          lit(true).as("langOk"), lit("").as("routablePoints"),
-          coalesce(col("lang_texts"),
-            map().cast("map<string,string>")).as("langTexts"),
-          lit(0).as("phraseHash"),
-          col("ctyp"), col("corder"),
-          lit(array()).cast("array<string>").as("allTypes"),
-          lit(0).as("vorder"), lit(0).as("cpos"))
-
-    val tagged = coverRows.unionByName(leadRows).unionByName(contextRows)
-      .unionByName(setsRows)
-      .as[VRowT]
-
     // templating context: user-supplied inline helpers + the active
     // worldview ride into the formatting closures (reference
     // opts.formatHelpers / getPlaceName's renderObj.worldview)
@@ -242,8 +122,8 @@ object ContextRank {
     val layersBc = call.layersBc
     // hard cap 10 (reference geocode.js:340)
     val limit = math.min(opts.limit, 10)
-    val finals = PerQuery.kernel(tagged, "query_id") {
-        (qid: Long, it: Iterator[VRowT]) =>
+    val finals = PerQuery.kernel(parts, "query_id") {
+        (qid: Long, it: Iterator[QueryPart]) =>
       val (cfgs, ndxs) = layersBc.value
       // idx-keyed config lookups, built once per query group (not
       // collectFirst per row)
@@ -258,187 +138,217 @@ object ContextRank {
         cfgByIdx.get(idx).map { case (_, c) =>
           (c.geocoderInheritScore, c.geocoderGrantScore, c.geocoderIgnoreOrder) }
           .getOrElse((false, true, false))
-      val rows = it.toVector
-      // loose sets (kind 3): best cover per tmpid over ALL spatialmatches
-      val setsCovers = rows.filter(_.kind == 3).map(r =>
-        VerifyRank.VCover(r.tmpid, r.idx, r.mask, r.relev, r.text, r.zoom,
-          r.phraseHash))
-      val loose = VerifyRank.looseSets(setsCovers)
-      val byPos = rows.filter(_.kind != 3).groupBy(_.position)
-      val vresults = byPos.toVector.sortBy(_._1).flatMap { case (posn, rs) =>
-        // spatialmatch cover order (pos) — covers.head is the lead cover
-        val covers = rs.filter(_.kind == 0).sortBy(_.pos).map(r =>
-          VerifyRank.VCover(r.tmpid, r.idx, r.mask, r.relev, r.text, r.zoom,
-            r.phraseHash))
-        val leadOpt = rs.find(_.kind == 2)
-        leadOpt.map { lead =>
-          // override:{type} substitution (verifymatch.js:597-631): the lead's
-          // override prop replaces a context element's text; the replaced
-          // element no longer matches any cover (no tmpid). The CHUNK-scoped
-          // peer bumps are resolved inside VerifyRank.rankChunk from the
-          // applied (type, override) list collected here.
-          val applied = Vector.newBuilder[(String, String)]
-          // R8: context order is the stackFeatures claim order (corder),
-          // fine->coarse, not plain idx order (shifting can reorder)
-          val ctx: Vector[(VRowT, Boolean)] =
-            rs.filter(_.kind == 1).sortBy(_.corder).map { r =>
-              // override:{type} keys on the SOURCE type (verifymatch.js:598)
-              val typ = typFmtOf(r.idx)._1
-              lead.overrides.get(typ) match {
-                case Some(ov) if r.fullText != ov =>
-                  applied += ((typ, ov))
-                  (r.copy(display = ov.split(",")(0).trim, fullText = ov,
-                    fscore = 0.0, featureId = lead.featureId), true)
-                case _ => (r, false)
-              }
-            }.toVector
-          val context = {
-            val (li, lg, lo) = flagsOf(lead.idx)
-            VerifyRank.VCtx(lead.tmpid, lead.idx, ndxOf(lead.idx),
-              lead.display, ignoreOrder = lo, fullText = lead.fullText,
-              score = lead.fscore, inheritScore = li, grantScore = lg,
-              langTexts = lead.langTexts) +:
-              ctx.map { case (r, replaced) =>
-                val (ci, cg, cio) = flagsOf(r.idx)
-                // replaced elements carry no cover identity (tmpid/idx -1)
-                VerifyRank.VCtx(if (replaced) -1L else r.tmpid,
-                  if (replaced) -1 else r.idx, ndxOf(r.idx), r.display,
-                  ignoreOrder = cio, fullText = r.fullText, score = r.fscore,
-                  inheritScore = ci, grantScore = cg, langTexts = r.langTexts)
-              }
-          }
-          // O1: geocoder_format template of the lead layer, else the
-          // default "number name, name..." join (format-features.js:50-112).
-          // place_name is always built with matched=false (format-features
-          // .js:162); the recovered matching_text is a SEPARATE output field
-          // (matching_place_name uses it, place_name never does).
-          // extid type: lead = last of carmen:types (verifymatch.js:476-478),
-          // context = the type it CLAIMED in stackFeatures (context.js:211)
-          val leadTyp =
-            if (lead.allTypes.nonEmpty) lead.allTypes.last
-            else typFmtOf(lead.idx)._1
-          def ctxTyp(r: VRowT): String =
-            if (r.ctyp.nonEmpty) r.ctyp else typFmtOf(r.idx)._1
-          val ctxFeats = FormatPlace.CtxFeat(leadTyp, lead.display, lead.number) +:
-            ctx.map { case (r, _) =>
-              FormatPlace.CtxFeat(ctxTyp(r), r.display, r.number) }.toVector
-          // template precedence (format-features.js getFormatString):
-          // feature carmen:format_{lang} > feature carmen:format >
-          // source geocoder_format_{lang} > source geocoder_format
-          def templateFor(lang: Option[String]): String = {
-            val featFormats = lead.overrides.collect {
-              case (k, v) if k.startsWith("carmen:format") =>
-                k.stripPrefix("carmen:format").stripPrefix("_") -> v
-            }
-            val layerCfg = cfgByIdx.get(lead.idx).map(_._2)
-            val layerFormats = layerCfg.map(_.geocoderFormats).getOrElse(Map.empty)
-            def langPick(m: Map[String, String]): Option[String] = lang.flatMap { l =>
-              ClosestLang.closestLangLabel(l.replace("-", "_"),
-                m.keys.filter(_.nonEmpty).toVector.sorted).flatMap(m.get)
-            }
-            // getFormatString guard (format-features.js:21-36): the source's
-            // language template applies only when some context member has
-            // text in (something close to) the queried language
-            val anyLangText = lang.exists { l =>
-              val ll = l.replace("-", "_")
-              (lead.langTexts +: ctx.map(_._1.langTexts)).exists(lts =>
-                ClosestLang.closestLangLabel(ll,
-                  lts.keys.toVector.sorted).isDefined)
-            }
-            langPick(featFormats).orElse(featFormats.get(""))
-              .orElse(if (anyLangText) langPick(layerFormats) else None)
-              .getOrElse(typFmtOf(lead.idx)._2)
-          }
-          val placeName = FormatPlace.placeName(ctxFeats,
-            templateFor(language), formatHelpers, worldviewName)
-          // multi-language request: place_name per requested language, each
-          // with language-selected member text and that language's template
-          val placeNames: Map[String, String] =
-            if (requestedLangs.size < 2) Map.empty
-            else {
-              def disp(fullText: String, lts: Map[String, String], lang: String): String =
-                ClosestLang.getText(Some(lang),
-                  ("carmen:text" -> fullText) +: lts.toVector.sortBy(_._1)
-                    .map { case (k, v) => ("carmen:text_" + k) -> v })._1
-              requestedLangs.map { lang =>
-                val feats = FormatPlace.CtxFeat(leadTyp,
-                  disp(lead.fullText, lead.langTexts, lang), lead.number) +:
-                  ctx.map { case (r, _) => FormatPlace.CtxFeat(ctxTyp(r),
-                    disp(r.fullText, r.langTexts, lang), r.number) }.toVector
-                lang -> FormatPlace.placeName(feats,
-                  templateFor(Some(lang)), formatHelpers, worldviewName)
-              }.toMap
-            }
-          // matching_place_name (format-features.js:162-183 matched=true):
-          // each member whose tmpid is in the query's cover sets recovers
-          // the synonym it matched; assembled only when some member (lead
-          // or context) actually matched a non-display synonym
-          val matchingPlaceName: String = {
-            def memberMatch(r: VRowT): Option[String] =
-              loose.get(r.tmpid).flatMap { c =>
-                FormatPlace.getMatchingText(language, r.fullText, r.langTexts,
-                  matchesLanguage = true, c.phraseHash, c.text,
-                  cfgByIdx.get(r.idx).map(_._2.categories).getOrElse(Set.empty))
-              }
-            val leadMatch = Option(lead.matchingText).filter(_.nonEmpty)
-            val ctxMatches = ctx.map { case (r, _) => memberMatch(r) }
-            if (leadMatch.isEmpty && ctxMatches.forall(_.isEmpty)) ""
-            else {
-              val feats = FormatPlace.CtxFeat(leadTyp,
-                leadMatch.getOrElse(lead.display), lead.number) +:
-                ctx.zip(ctxMatches).map { case ((r, _), m) =>
-                  FormatPlace.CtxFeat(ctxTyp(r), m.getOrElse(r.display), r.number)
-                }.toVector
-              FormatPlace.placeName(feats, templateFor(language),
-                formatHelpers, worldviewName)
-            }
-          }
-          // O2 address-unique dedupe key (format-features.js:320-374):
-          // cover texts + context extids; skipped for short address queries
-          // ("100 ma"-style autocomplete) to avoid over-deduping
-          val shortAddress = covers.headOption.exists(c =>
-            shortAddressPattern.matcher(c.text).matches())
-          // the key applies to every address-layer lead: street fallbacks
-          // carry carmen:address=null, which the reference treats as SET
-          // (format-features.js:270 `!== undefined`), so same-cover-text
-          // streets dedupe (geocode-unit.duplicate-address)
-          val isAddrLead = cfgByIdx.get(lead.idx).exists(_._2.geocoderAddress)
-          val addrKey =
-            if (isAddrLead && !shortAddress) {
-              val coverTexts = covers.map(" " + _.text).mkString
-              val ctxIds = ctx.map { case (r, _) =>
-                s"${ctxTyp(r)}.${r.featureId}" }
-              Some("_" + (coverTexts +: ctxIds).mkString(":"))
-            } else None
-          // chunk ghost-dedupe text: the language-selected full text
-          // (verifymatch.js:662-665)
-          val dedupeText =
-            if (language.isEmpty || lead.langTexts.isEmpty) lead.fullText
-            else ClosestLang.closestLangLabel(
-                language.get.replace("-", "_"),
-                lead.langTexts.keys.toVector.sorted)
-              .flatMap(lead.langTexts.get).getOrElse(lead.fullText)
-          (VerifyRank.VResult(posn, lead.smRelev, lead.scoredist,
-            covers.toVector, context, lead.featureId, ndxOf(lead.idx),
-            addressNull = lead.number.isEmpty,
-            ghost = lead.fscore < 0,
-            hasAddress = lead.number.nonEmpty, addressPos = lead.addressPos,
-            fromCluster = lead.fromCluster, interpolated = lead.interpolated,
-            omitted = lead.omitted, appliedOverrides = applied.result(),
-            leadType = typFmtOf(lead.idx)._1, leadScore = lead.fscore,
-            dedupeText = dedupeText, sortPos = lead.cpos,
-            addressOrder = cfgByIdx.get(lead.idx)
-              .map(_._2.geocoderAddressOrder).getOrElse("ascending")),
-            Meta(placeName, lead.featureId, lead.lon, lead.lat, lead.idx,
-              lead.number, lead.omitted, lead.interpolated, addrKey,
-              lead.matchingText, lead.fullText, lead.fscore, lead.langOk,
-              lead.routablePoints,
-              if (lead.allTypes.nonEmpty) lead.allTypes else
-                Seq(typFmtOf(lead.idx)._1),
-              placeNames = placeNames,
-              matchingPlaceName = matchingPlaceName),
-            lead.vorder)
+      val results = Vector.newBuilder[Spatialmatch.ResultRow]
+      val leads = Vector.newBuilder[Verifymatch.LeadOut]
+      val cands = Vector.newBuilder[Reverse.CandRow]
+      it.foreach { p =>
+        if (p.result != null) results += p.result
+        else if (p.lead != null) leads += p.lead
+        else cands += p.cand
+      }
+      val coversByRank = results.result().map(r => r.rank -> r.covers).toMap
+      def vcover(c: Spatialmatch.CoverRow, relev: Double): VerifyRank.VCover =
+        VerifyRank.VCover(c.tmpid, c.idx, c.mask, relev, c.text, c.zoom,
+          c.phraseHash)
+      // loose sets (rank 0): best cover per tmpid over ALL spatialmatches
+      val loose = VerifyRank.looseSets(
+        coversByRank.getOrElse(0, Nil).map(c => vcover(c, c.relev)))
+      // the query's matched set (the reference's `sets`): every result
+      // cover's tmpid — context candidates in it take the forward-
+      // phrasematch pick priority (R4/R5)
+      val matchedSet: Set[Long] =
+        coversByRank.valuesIterator.flatMap(_.map(_.tmpid)).toSet
+      val candsBySub = cands.result().groupBy(_.sub)
+      val vresults = leads.result().sortBy(_.position).map { lead =>
+        val posn = lead.position
+        // spatialmatch cover order (pos) — covers.head is the lead cover,
+        // which takes the street-fallback penalty when its address number
+        // failed to resolve
+        val covers = coversByRank.getOrElse(posn, Nil).zipWithIndex.map {
+          case (c, pos) =>
+            vcover(c, if (pos == 0 && lead.addrPenalty) c.relev * 0.99 else c.relev)
         }
+        // the context stack (R8, context.js:116-254): one pick per layer
+        // coarser than the lead's name-group firstidx, then stackFeatures
+        // with the lead's last carmen:type as maxtype
+        val maxidx = byNameFirstIdx.getOrElse(lead.idx, lead.idx)
+        val picks = candsBySub.getOrElse(posn, Vector.empty)
+          .filter(_.idx < maxidx)
+          .map(c => c.copy(matched = matchedSet.contains(c.tmpid)))
+          .groupBy(_.idx).toVector.sortBy(_._1)
+          .flatMap { case (_, rs) =>
+            Reverse.pickPerIdx(Reverse.rankCap(rs, Reverse.ContextModeLimit),
+              scoreMode = false, scoreModeEnabled = false, None, None)
+          }
+        val stacked = Reverse.stackMemo(picks,
+          Reverse.StackOpts(maxtype = lead.leadTypes.lastOption.getOrElse("")))
+        // override:{type} substitution (verifymatch.js:597-631): the lead's
+        // override prop replaces a context element's text; the replaced
+        // element no longer matches any cover (no tmpid). The CHUNK-scoped
+        // peer bumps are resolved inside VerifyRank.rankChunk from the
+        // applied (type, override) list collected here.
+        val applied = Vector.newBuilder[(String, String)]
+        // R8: context order is the stackFeatures claim order, fine->coarse,
+        // not plain idx order (shifting can reorder)
+        val ctx: Vector[(Ctx, Boolean)] = stacked.map { s =>
+          val c = s.cand
+          val r = Ctx(c.tmpid, c.idx,
+            if (language.isEmpty) firstSynonym(c.text)
+            else ClosestLang.displayText(language, c.text, c.langTexts),
+            c.text, c.score, c.feature_id, c.langTexts, s.claimedType)
+          // override:{type} keys on the SOURCE type (verifymatch.js:598)
+          val typ = typFmtOf(r.idx)._1
+          lead.overrides.get(typ) match {
+            case Some(ov) if r.fullText != ov =>
+              applied += ((typ, ov))
+              (r.copy(display = ov.split(",")(0).trim, fullText = ov,
+                fscore = 0.0, featureId = lead.featureId), true)
+            case _ => (r, false)
+          }
+        }
+        val context = {
+          val (li, lg, lo) = flagsOf(lead.idx)
+          VerifyRank.VCtx(lead.tmpid, lead.idx, ndxOf(lead.idx),
+            lead.display, ignoreOrder = lo, fullText = lead.fullText,
+            score = lead.fscore, inheritScore = li, grantScore = lg,
+            langTexts = lead.langTexts) +:
+            ctx.map { case (r, replaced) =>
+              val (ci, cg, cio) = flagsOf(r.idx)
+              // replaced elements carry no cover identity (tmpid/idx -1)
+              VerifyRank.VCtx(if (replaced) -1L else r.tmpid,
+                if (replaced) -1 else r.idx, ndxOf(r.idx), r.display,
+                ignoreOrder = cio, fullText = r.fullText, score = r.fscore,
+                inheritScore = ci, grantScore = cg, langTexts = r.langTexts)
+            }
+        }
+        // O1: geocoder_format template of the lead layer, else the
+        // default "number name, name..." join (format-features.js:50-112).
+        // place_name is always built with matched=false (format-features
+        // .js:162); the recovered matching_text is a SEPARATE output field
+        // (matching_place_name uses it, place_name never does).
+        // extid type: lead = last of carmen:types (verifymatch.js:476-478),
+        // context = the type it CLAIMED in stackFeatures (context.js:211)
+        val leadTyp =
+          if (lead.leadTypes.nonEmpty) lead.leadTypes.last
+          else typFmtOf(lead.idx)._1
+        def ctxTyp(r: Ctx): String =
+          if (r.ctyp.nonEmpty) r.ctyp else typFmtOf(r.idx)._1
+        val ctxFeats = FormatPlace.CtxFeat(leadTyp, lead.display, lead.number) +:
+          ctx.map { case (r, _) =>
+            FormatPlace.CtxFeat(ctxTyp(r), r.display, "") }.toVector
+        // template precedence (format-features.js getFormatString):
+        // feature carmen:format_{lang} > feature carmen:format >
+        // source geocoder_format_{lang} > source geocoder_format
+        def templateFor(lang: Option[String]): String = {
+          val featFormats = lead.overrides.collect {
+            case (k, v) if k.startsWith("carmen:format") =>
+              k.stripPrefix("carmen:format").stripPrefix("_") -> v
+          }
+          val layerCfg = cfgByIdx.get(lead.idx).map(_._2)
+          val layerFormats = layerCfg.map(_.geocoderFormats).getOrElse(Map.empty)
+          def langPick(m: Map[String, String]): Option[String] = lang.flatMap { l =>
+            ClosestLang.closestLangLabel(l.replace("-", "_"),
+              m.keys.filter(_.nonEmpty).toVector.sorted).flatMap(m.get)
+          }
+          // getFormatString guard (format-features.js:21-36): the source's
+          // language template applies only when some context member has
+          // text in (something close to) the queried language
+          val anyLangText = lang.exists { l =>
+            val ll = l.replace("-", "_")
+            (lead.langTexts +: ctx.map(_._1.langTexts)).exists(lts =>
+              ClosestLang.closestLangLabel(ll,
+                lts.keys.toVector.sorted).isDefined)
+          }
+          langPick(featFormats).orElse(featFormats.get(""))
+            .orElse(if (anyLangText) langPick(layerFormats) else None)
+            .getOrElse(typFmtOf(lead.idx)._2)
+        }
+        val placeName = FormatPlace.placeName(ctxFeats,
+          templateFor(language), formatHelpers, worldviewName)
+        // multi-language request: place_name per requested language, each
+        // with language-selected member text and that language's template
+        val placeNames: Map[String, String] =
+          if (requestedLangs.size < 2) Map.empty
+          else {
+            requestedLangs.map { lang =>
+              val feats = FormatPlace.CtxFeat(leadTyp, ClosestLang.displayText(
+                Some(lang), lead.fullText, lead.langTexts), lead.number) +:
+                ctx.map { case (r, _) => FormatPlace.CtxFeat(ctxTyp(r),
+                  ClosestLang.displayText(Some(lang), r.fullText, r.langTexts),
+                  "") }.toVector
+              lang -> FormatPlace.placeName(feats,
+                templateFor(Some(lang)), formatHelpers, worldviewName)
+            }.toMap
+          }
+        // matching_place_name (format-features.js:162-183 matched=true):
+        // each member whose tmpid is in the query's cover sets recovers
+        // the synonym it matched; assembled only when some member (lead
+        // or context) actually matched a non-display synonym
+        val matchingPlaceName: String = {
+          def memberMatch(r: Ctx): Option[String] =
+            loose.get(r.tmpid).flatMap { c =>
+              FormatPlace.getMatchingText(language, r.fullText, r.langTexts,
+                matchesLanguage = true, c.phraseHash, c.text,
+                cfgByIdx.get(r.idx).map(_._2.categories).getOrElse(Set.empty))
+            }
+          val leadMatch = Option(lead.matchingText).filter(_.nonEmpty)
+          val ctxMatches = ctx.map { case (r, _) => memberMatch(r) }
+          if (leadMatch.isEmpty && ctxMatches.forall(_.isEmpty)) ""
+          else {
+            val feats = FormatPlace.CtxFeat(leadTyp,
+              leadMatch.getOrElse(lead.display), lead.number) +:
+              ctx.zip(ctxMatches).map { case ((r, _), m) =>
+                FormatPlace.CtxFeat(ctxTyp(r), m.getOrElse(r.display), "")
+              }.toVector
+            FormatPlace.placeName(feats, templateFor(language),
+              formatHelpers, worldviewName)
+          }
+        }
+        // O2 address-unique dedupe key (format-features.js:320-374):
+        // cover texts + context extids; skipped for short address queries
+        // ("100 ma"-style autocomplete) to avoid over-deduping
+        val shortAddress = covers.headOption.exists(c =>
+          shortAddressPattern.matcher(c.text).matches())
+        // the key applies to every address-layer lead: street fallbacks
+        // carry carmen:address=null, which the reference treats as SET
+        // (format-features.js:270 `!== undefined`), so same-cover-text
+        // streets dedupe (geocode-unit.duplicate-address)
+        val isAddrLead = cfgByIdx.get(lead.idx).exists(_._2.geocoderAddress)
+        val addrKey =
+          if (isAddrLead && !shortAddress) {
+            val coverTexts = covers.map(" " + _.text).mkString
+            val ctxIds = ctx.map { case (r, _) =>
+              s"${ctxTyp(r)}.${r.featureId}" }
+            Some("_" + (coverTexts +: ctxIds).mkString(":"))
+          } else None
+        // chunk ghost-dedupe text: the language-selected full text
+        // (verifymatch.js:662-665)
+        val dedupeText =
+          if (language.isEmpty || lead.langTexts.isEmpty) lead.fullText
+          else ClosestLang.closestLangLabel(
+              language.get.replace("-", "_"),
+              lead.langTexts.keys.toVector.sorted)
+            .flatMap(lead.langTexts.get).getOrElse(lead.fullText)
+        (VerifyRank.VResult(posn, lead.smRelev, lead.scoredist,
+          covers.toVector, context, lead.featureId, ndxOf(lead.idx),
+          addressNull = lead.number.isEmpty,
+          ghost = lead.fscore < 0,
+          hasAddress = lead.number.nonEmpty, addressPos = lead.addressPos,
+          fromCluster = lead.fromCluster, interpolated = lead.interpolated,
+          omitted = lead.omitted, appliedOverrides = applied.result(),
+          leadType = typFmtOf(lead.idx)._1, leadScore = lead.fscore,
+          dedupeText = dedupeText, sortPos = lead.cpos,
+          addressOrder = cfgByIdx.get(lead.idx)
+            .map(_._2.geocoderAddressOrder).getOrElse("ascending")),
+          Meta(placeName, lead.featureId, lead.lon, lead.lat, lead.idx,
+            lead.number, lead.omitted, lead.interpolated, addrKey,
+            lead.matchingText, lead.fullText, lead.fscore, lead.langOk,
+            lead.routablePoints,
+            if (lead.leadTypes.nonEmpty) lead.leadTypes else
+              Seq(typFmtOf(lead.idx)._1),
+            placeNames = placeNames,
+            matchingPlaceName = matchingPlaceName),
+          lead.vorder)
       }
       val meta = vresults.map { case (vr, m, _) => vr.position -> m }.toMap
       // V14 context-phase chunk machine (verifymatch.js:56-66, 264-331):

@@ -26,8 +26,10 @@ import graft.model._
   *  3. [[Verifymatch]]: lead covers joined to features, address-cluster/
   *     ITP resolution (reference verifymatch.js:397-492), the feature-phase
   *     chunk machine
-  *  4. [[ContextRank]]: reverse-context fill, per-query strict/loose
-  *     re-rank and format
+  *  4. [[ContextRank]]: one tile join at the verified leads' centers
+  *     (context fill), then one per-query kernel over the spatialmatch
+  *     results, the leads and their tile candidates: context stacking,
+  *     strict/loose re-rank and format
   */
 object Forward {
 
@@ -244,8 +246,8 @@ object Forward {
       opts.autocomplete, opts.fuzzy)
     val results = Spatialmatch.run(call,
       Spatialmatch.pmRows(index, call.requestedLangs.headOption, matched))
-    val covers = Spatialmatch.covers(results)
-    ContextRank.run(call, covers, Verifymatch.run(call, covers))
+    ContextRank.run(call, results,
+      Verifymatch.run(call, Spatialmatch.covers(results)))
   }
 
   /** O3 debug surface (reference geocode.js:402-414, options.debug
@@ -257,7 +259,8 @@ object Forward {
                        queries: DataFrame,
                        opts: Options = Options()): DataFrame = {
     val subs = Phrasematch.subqueries(spark, queries,
-      Phrasematch.queryGroups(index), opts.proximity.isDefined, opts.fuzzy)
+      Phrasematch.queryGroups(index), opts.proximity.isDefined, opts.fuzzy,
+      opts.maxCorrectionLength)
     Phrasematch.joins(index, index, subs, opts.autocomplete, opts.fuzzy)
       .select(col("queryId").as("query_id"), col("layer"), col("subquery"),
         col("mask"), col("weight"), col("is_prefix"), col("is_fuzzy"))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions.col
 
 /** The one partitioning rule of the per-query kernels (spatialmatch,
-  * verifymatch, context stacking, re-rank and format, reverse stacking):
+  * verifymatch, context stacking with re-rank and format, reverse and
+  * limit-reverse stacking):
   * every grouped kernel in `graft.query` runs through [[kernel]], the only
   * place there that calls `flatMapGroups`.
   */

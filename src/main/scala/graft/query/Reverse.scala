@@ -100,13 +100,14 @@ object Reverse {
     * the vtquery limit. distanceMode pre-filters ghost features exactly as
     * the reference's basic-filters do (context.js:588).
     *
+    * `matched` is false on every row: forward context fill sets it from
+    * the query's phrasematch covers inside its kernel.
+    *
     * @param points    (query_id, sub, lon, lat)
-    * @param matchedDf optional (query_id, tmpid) forward phrasematch sets
     * @param allowedIdxs layer visibility (worldview / maxidx pruning)
     */
   def candidates(points: DataFrame, index: CarmenIndex,
                  distanceMode: Boolean, radiusMiles: Double,
-                 matchedDf: Option[DataFrame] = None,
                  allowedIdxs: Option[Set[Int]] = None): Dataset[CandRow] = {
     val spark = points.sparkSession
     import spark.implicits._
@@ -149,17 +150,8 @@ object Reverse {
     val ranked = ghosted
       .withColumn("rnk", lit(0))
       .withColumn("tmpid", tmpidCol(col("idx"), col("feature_id")))
-    val flagged = matchedDf match {
-      case Some(m) =>
-        val mm = m.select(col("query_id").cast("long").as("m_qid"),
-          col("tmpid").as("m_tmpid")).distinct()
-        ranked.join(mm, ranked("query_id") === mm("m_qid") &&
-            ranked("tmpid") === mm("m_tmpid"), "left")
-          .withColumn("matched", col("m_tmpid").isNotNull)
-          .drop("m_qid", "m_tmpid")
-      case None => ranked.withColumn("matched", lit(false))
-    }
-    flagged.select(col("query_id"), col("sub"), col("idx"), col("layer"),
+    ranked.withColumn("matched", lit(false))
+      .select(col("query_id"), col("sub"), col("idx"), col("layer"),
       col("types"), coalesce(col("conflict"), lit("")).as("conflict"),
       col("feature_id"), col("tmpid"), col("text"), col("dist_miles"),
       col("score"), col("geom_type"),
@@ -332,10 +324,7 @@ object Reverse {
       val suffix = context.drop(i)
       val lead = suffix.head
       def display(c: CandRow): String =
-        graft.core.ClosestLang.getText(opts.language,
-          ("carmen:text" -> c.text) +:
-            c.langTexts.toVector.sortBy(_._1)
-              .map { case (k, v) => ("carmen:text_" + k) -> v })._1
+        ClosestLang.displayText(opts.language, c.text, c.langTexts)
       StackedRow(lead.cand.query_id,
         suffix.map(s => display(s.cand)).mkString(", "),
         lead.cand.feature_id, lead.cand.layer, lead.cand.center_lon,
@@ -403,7 +392,7 @@ object Reverse {
     val allowed = worldviewIdxs(index, opts.worldview).filter(_ < maxidx)
     val distanceMode = opts.reverseMode != "score"
     val cands = candidates(cpts, index, distanceMode, opts.radiusMiles,
-      None, Some(allowed))
+      Some(allowed))
     val cfgByIdx = pickConfig(index, opts.types, full = true)
     val scoreMode = opts.reverseMode == "score"
     val optsB = opts
@@ -677,7 +666,7 @@ object Reverse {
     val ctxPts = near.select(col("query_id"), col("rank").as("sub"),
       col("center_lon").as("lon"), col("center_lat").as("lat"))
     val cands = candidates(ctxPts, index, distanceMode = false,
-      radiusMiles = opts.radiusMiles, None, Some(wvIdxs))
+      radiusMiles = opts.radiusMiles, Some(wvIdxs))
     val metaDs = near.select(col("query_id"), col("rank").as("sub"),
       col("idx").as("target_idx"), col("tmpid").as("target_tmpid"))
       .as[TargetMeta]

@@ -285,12 +285,13 @@ object Spatialmatch {
             sm.covers.map(coverRowOf))
         }.iterator
     }
-    // reused by the cover, lead and context branches: materialize once
+    // read by verify (as covers) and by the context-rank kernel:
+    // materialize once
     call.barrier("spatialmatch", count = "spatialmatch")(results.toDF())
   }
 
   /** One row per result cover (`pos` 0 is the lead cover; position 0 is
-    * the loose-sets row): the verify and context-rank input.
+    * the loose-sets row): the verify input.
     */
   private[query] def covers(results: DataFrame): DataFrame =
     results.select(col("queryId").as("query_id"),

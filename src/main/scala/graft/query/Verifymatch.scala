@@ -135,9 +135,7 @@ object Verifymatch {
     // format-features.js:93)
     val langDisplay =
       if (language.isEmpty || r.fLangTexts.isEmpty || r.featureId < 0) r.display
-      else ClosestLang.getText(language,
-        ("carmen:text" -> r.fFullText) +: r.fLangTexts.toVector.sortBy(_._1)
-          .map { case (k, v) => ("carmen:text_" + k, v) })._1
+      else ClosestLang.displayText(language, r.fFullText, r.fLangTexts)
     // O1: matching_text recovery (format-features.js:383-479)
     val matchingText =
       if (r.featureId < 0 || r.fFullText.isEmpty) ""

@@ -149,6 +149,14 @@ class GeocodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dbg.exists(r => r._1 == "street" && r._2 == "west lake view rd"), s"got ${dbg.toSeq}")
     assert(dbg.exists(r => r._1 == "place" && r._2 == "englewood"), s"got ${dbg.toSeq}")
     assert(dbg.forall(r => r._3 > 0 && r._3 <= 1.0))
+    // the debug surface enumerates with the call's maxCorrectionLength, as
+    // forward() does: over a 3-token limit a 5-token query gets no fuzzy
+    // edit budget, so no window is a fuzzy match
+    val typo = Seq((2L, "West Lake Viev Rd Englewood")).toDF("query_id", "query")
+    def fuzzyRows(opts: Forward.Options): Long =
+      Forward.phrasematchDebug(spark, index, typo, opts).where(col("is_fuzzy")).count()
+    assert(fuzzyRows(Forward.Options()) > 0)
+    assert(fuzzyRows(Forward.Options(maxCorrectionLength = 3)) === 0L)
   }
 
   private val gazPlaces = 40

@@ -13,6 +13,9 @@ import TestGeom._
   *
   *  - reference test/acceptance/geocode-unit.ghost.test.js — a ghost
   *    (score -1) city does not block the scored neighborhood+city stack;
+  *  - the forward-phrasematch context pick (context.js:448-556): of two
+  *    ghost city polygons around the lead, the one the query names stacks
+  *    and the lower-id unmatched one is skipped;
   *  - geocode-unit.rebalance.test.js — an address stack covering more
   *    specific tokens outranks a postcode stack with a higher-scored lead;
   *  - geocode-unit.cluster-vs-range.test.js — a cluster point beats the
@@ -22,6 +25,7 @@ import TestGeom._
 class GhostRebalanceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
   private var ghost: IndexBuilder.CarmenIndex = _
+  private var namedCtx: IndexBuilder.CarmenIndex = _
   private var rebalance: IndexBuilder.CarmenIndex = _
   private var cvr: IndexBuilder.CarmenIndex = _
 
@@ -46,6 +50,14 @@ class GhostRebalanceSpec extends AnyFunSuite with BeforeAndAfterAll {
         docs(GeoDoc(5, "Mos Eisley", 10, t32, 0, 0))),
       (LayerConfig("poi", idx = 3, zoom = 6, typ = "poi"),
         docs(GeoDoc(5, "Tatooine Community College", 0, pt(0, 0), 0, 0)))))
+
+    namedCtx = IndexBuilder.build(spark, Seq(
+      (LayerConfig("city", idx = 0, zoom = 6, typ = "city"),
+        docs(
+          GeoDoc(1, "Anchorhead", -1, t32, 0, 0),
+          GeoDoc(2, "Mos Espa", -1, t32, 0, 0))),
+      (LayerConfig("neighborhood", idx = 1, zoom = 6, typ = "neighborhood"),
+        docs(GeoDoc(3, "Old Town", 10, t32, 0, 0)))))
 
     rebalance = IndexBuilder.build(spark, Seq(
       (LayerConfig("region", idx = 0, zoom = 6, typ = "region"),
@@ -88,6 +100,14 @@ class GhostRebalanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = fw(ghost, "Mos Eisley Tatooine")
     assert(res.head._1 === "Mos Eisley, Tatooine, Outer Rim", s"got $res")
     assert(res.head._4 === 1.0, s"got $res")
+  }
+
+  test("matched context: the named ghost polygon stacks over a lower-id one") {
+    // a ghost context feature stacks only when the query matched it; with
+    // non-ghost polygons the lowest id at distance 0 would win either way
+    val res = fw(namedCtx, "Old Town Mos Espa")
+    assert(res.head._1 === "Old Town, Mos Espa", s"got $res")
+    assert(res.head._3 === 3L, s"got $res")
   }
 
   test("rebalance: address stack beats higher-scored postcode stack") {
