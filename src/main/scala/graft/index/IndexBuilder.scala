@@ -20,14 +20,14 @@ import graft.model._
   *    scale this becomes rangepartition + per-partition offsets;
   *  - postings are written partitioned by layer and bucketable by
   *    (cell prefix, phrase hash) — the explicit range+hash scheme;
-  *  - tile_features is the exploded (z, x, y) cover table, partition-pruned
-  *    by reverse lookups.
+  *  - tile_features is the exploded (z, x, y) cover table; queries probe
+  *    it through the resident [[TileLookup]] built from it.
   */
 object IndexBuilder {
 
   /** All built tables for one layer. `postings` and `tileFeatures` are
     * uncached views: queries read them through the [[CarmenIndex]] union
-    * tables, which hold the only resident copy.
+    * table and tile lookup, which hold the only resident copy.
     */
   final case class LayerIndex(
       config: LayerConfig,
@@ -151,23 +151,18 @@ object IndexBuilder {
     lazy val allPostings: DataFrame = allPostingsQsig.drop("qsig")
     /** Per-grid exploded view of [[allPostings]] (analyze/export scans). */
     lazy val allPostingsFlat: DataFrame = flattenPostings(allPostings)
-    /** All layers' tile_features unified with idx/layer columns: one join
-      * target for reverse lookups and context fill instead of a per-layer
-      * join fan-out.
+    /** Every layer's tile rows in one resident (z, x, y) lookup, probed by
+      * reverse lookups and context fill; the only resident copy of the
+      * tile rows (the per-layer `tileFeatures` are not cached).
       */
-    lazy val allTileFeatures: DataFrame =
-      layers.map { l =>
-        l.tileFeatures.select(lit(l.config.idx).as("idx"),
-          lit(l.config.name).as("layer"), col("z"), col("x"), col("y"),
-          col("id").as("feature_id"), col("id24"), col("text"), col("score"),
-          col("center_lon").as("f_lon"), col("center_lat").as("f_lat"),
-          col("geom_bin"), col("geom_type"), col("langTexts"),
-          col("types"), lit(l.config.conflictKey).as("conflict"))
-      }.reduce(_ unionByName _)
-        // localCheckpoint, not cache: a many-source config (the reference
-        // supports 128) makes the union lineage itself tens of MB per task
-        // binary; truncating it keeps reverse/context task dispatch O(rows)
-        .localCheckpoint()
+    lazy val tileLookup: TileLookup = TileLookup.build(layers)
+    /** All layers' tile rows unified with idx/layer columns (idx, layer, z,
+      * x, y, feature_id, id24, text, score, f_lon, f_lat, geom_bin,
+      * geom_type, langTexts, types, conflict): an uncached view over
+      * [[tileLookup]] that no query path reads. Counting it fills the
+      * lookup.
+      */
+    lazy val allTileFeatures: DataFrame = tileLookup.rows
     /** Worldviews configured across layers ("default" first). */
     lazy val worldviews: Vector[String] = {
       val declared = layers.map(_.config.worldview).filter(_.nonEmpty).distinct
@@ -254,8 +249,9 @@ object IndexBuilder {
       }
     /** Fill every cache that queries read: per-layer `features`, the
       * [[candByQsig]] tables, [[allPostingsQsig]], [[allFeaturesWide]] and
-      * [[allTileFeatures]]. Later calls then pay for lookups, not index
-      * build. A repeated call only rescans the filled caches.
+      * the [[tileLookup]] (through a count of [[allTileFeatures]]). Later
+      * calls then pay for lookups, not index build. A repeated call only
+      * rescans the filled caches.
       */
     def materialize(): CarmenIndex = {
       layers.foreach(_.features.count())

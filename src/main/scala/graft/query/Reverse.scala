@@ -5,41 +5,45 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core._
 import graft.index.IndexBuilder.CarmenIndex
+import graft.index.TileLookup
 import graft.ops.GeoOps
 
 /** Batch reverse geocode: points -> per-layer tile lookup -> per-layer
   * candidate pick -> stacked context (reference lib/geocoder/context.js).
   *
-  * The lookup is ONE partition-prunable equi-join: each point explodes to
-  * its tile at every distinct layer zoom, joined against the unified
-  * tile_features table on (z, x, y) — the Spark analog of the reference's
-  * LRU-cached per-layer vector-tile fetch (context.js:309-371), but with a
-  * single shuffle regardless of layer count. Containment is exact
-  * ray-casting for polygons (direct hit, distance 0); otherwise haversine
-  * distance to the feature center.
+  * The lookup probes the index's resident [[TileLookup]]: each point's
+  * tile at every distinct layer zoom goes, as one packed (z, x, y) key, to
+  * the lookup partition that owns it — the Spark analog of the reference's
+  * LRU-cached per-layer vector-tile fetch (context.js:309-371), with one
+  * shuffle of the call's points regardless of layer count and none of the
+  * tile rows. Containment is exact ray-casting for polygons (direct hit,
+  * distance 0); otherwise the distance to the feature's geometry.
   *
-  * R4/R5: the join keeps a per-layer CANDIDATE LIST (the vtquery limit-5 /
-  * limit-100 result set, context.js:583-606), and [[pickPerIdx]] ports
-  * processVtQueryResults' pick order — forward phrasematch > ghost
-  * phrasematch > plain nearest, with the exclusive-target short-circuit
+  * R4/R5: the probe keeps a per-layer CANDIDATE LIST (the vtquery limit-5 /
+  * limit-100 result set, context.js:583-606), and [[pickPerIdx]] walks it
+  * in (distance, id) order with the exclusive-target short-circuit
   * (context.js:448-556). R8: [[stackMemo]] ports stackFeatures fully —
   * carmen:types multi-type shifting, carmen:conflict keys, maxtype
   * exclusion and reference replacement rules (context.js:168-254).
   */
 object Reverse {
 
-  // PIP/distance over the PRE-PARSED binary geometry column (geom_bin,
-  // written at index-build time): no JSON parse in any per-candidate path —
-  // this join is hit by every reverse geocode and every forward context fill.
-  // ONE fused kernel per candidate row: containment and distance share a
-  // single Geom.fromBin parse (they were two UDFs = two parses), and the
-  // nondeterministic marker stops the optimizer from copying the call into
-  // the pushed-down filter (the duplicated-UDF plan of guide §4.4).
-  private val pipDistUdf = udf((bin: Array[Byte], lon: Double, lat: Double) => {
-    val g = Geom.fromBin(bin)
-    val hit = Geom.contains(g, lon, lat)
-    (hit, if (hit) 0.0 else Geom.distanceMiles(g, lon, lat))
-  }).asNondeterministic()
+  /** The vtquery direct_hit_polygon rule (context.js:587, 604) for one
+    * (point, feature) pair, over the pre-parsed binary geometry: a polygon
+    * matches only with the point inside it (distance 0), anything else when
+    * `near(distance)` holds. Containment and distance share one parse. A
+    * null geometry type matches only on a direct hit.
+    */
+  private def hitDistance(f: TileLookup.Feature, lon: Double, lat: Double)(
+      near: Double => Boolean): Option[Double] = {
+    val g = Geom.fromBin(f.geomBin)
+    if (Geom.contains(g, lon, lat)) Some(0.0)
+    else {
+      val dist = Geom.distanceMiles(g, lon, lat)
+      val polygon = f.geomType == "Polygon" || f.geomType == "MultiPolygon"
+      if (f.geomType != null && !polygon && near(dist)) Some(dist) else None
+    }
+  }
 
   /** distscore as a Column (reference lib/util/proximity.js:192-198). */
   def distscoreCol(dist: Column, score: Column): Column =
@@ -95,10 +99,20 @@ object Reverse {
   def tmpidCol(idxCol: Column, fidCol: Column): Column =
     idxCol.cast("long") * (1L << 25) + pmod(abs(fidCol), lit(1L << 24))
 
-  /** The per-(point, layer) candidate list: one partition-prunable (z,x,y)
-    * equi-join across all layers, ranked by (distance, id) and capped at
-    * the vtquery limit. distanceMode pre-filters ghost features exactly as
-    * the reference's basic-filters do (context.js:588).
+  /** Scalar twin of [[tmpidCol]]. */
+  def tmpid(idx: Int, fid: Long): Long =
+    idx.toLong * (1L << 25) + Math.floorMod(Math.abs(fid), 1L << 24)
+
+  /** A point probed in the tile lookup. */
+  final case class CandPoint(query_id: Long, sub: Int, lon: Double, lat: Double)
+
+  /** The per-(point, layer) candidate list: each point's tile at every
+    * layer zoom, probed in the index's resident [[TileLookup]] (no join,
+    * scan or broadcast of the tile rows). distanceMode pre-filters ghost
+    * features exactly as the reference's basic-filters do
+    * (context.js:588). The (distance, id) rank and the vtquery cap are
+    * applied by each consumer's per-query kernel ([[rankCap]]), so `rnk`
+    * is 0 here.
     *
     * `matched` is false on every row: forward context fill sets it from
     * the query's phrasematch covers inside its kernel.
@@ -112,53 +126,22 @@ object Reverse {
     val spark = points.sparkSession
     import spark.implicits._
     val pts = points.select(col("query_id").cast("long"),
-      col("sub").cast("int"), col("lon"), col("lat"))
-    val tiles = index.zooms.map { z =>
-      pts.withColumn("z", lit(z))
-        .withColumn("tx", GeoOps.tileX(col("lon"), z))
-        .withColumn("ty", GeoOps.tileY(col("lat"), z))
-    }.reduce(_ unionByName _)
-
+      col("sub").cast("int"), col("lon"), col("lat")).as[CandPoint]
     // vtquery's flat 1000 m default; an explicit positive radius overrides
-    val radiusCol =
-      if (radiusMiles > 0) lit(radiusMiles) else lit(VtqueryRadiusMiles)
-
-    val tf0 = index.allTileFeatures
-    val tf = allowedIdxs match {
-      case Some(s) if s.size != index.layers.size =>
-        tf0.where(col("idx").isin(s.toSeq: _*))
-      case _ => tf0
+    val radius = if (radiusMiles > 0) radiusMiles else VtqueryRadiusMiles
+    val allowed = allowedIdxs.filter(_.size != index.layers.size)
+    val rows = index.tileLookup.probe(TileLookup.keyed(pts, index.zooms, ring = 0)) {
+        (p: CandPoint, f: TileLookup.Feature) =>
+      // ghost pre-filter only in distance mode (basic-filters,
+      // context.js:588); a NaN score passes, like SQL's `score >= 0`
+      if (allowed.exists(!_.contains(f.idx)) || (distanceMode && f.score < 0)) None
+      else hitDistance(f, p.lon, p.lat)(_ <= radius).map { dist =>
+        CandRow(p.query_id, p.sub, f.idx, f.layer, f.types, f.conflict,
+          f.featureId, tmpid(f.idx, f.featureId), f.text, dist, f.score,
+          f.geomType, f.lon, f.lat, f.langTexts, matched = false, rnk = 0)
+      }
     }
-    val joined = tiles.join(tf, tiles("z") === tf("z") && tiles("tx") === tf("x") &&
-        tiles("ty") === tf("y"))
-      .drop(tf("z"))
-      .withColumn("pd", pipDistUdf(col("geom_bin"), col("lon"), col("lat")))
-      .withColumn("direct_hit", col("pd._1"))
-      .withColumn("dist_miles", col("pd._2"))
-      .drop("pd")
-      // vtquery direct_hit_polygon (context.js:587, 604): polygon features
-      // only match when the point is INSIDE; points/lines by radius
-      .where(col("direct_hit") ||
-        (!col("geom_type").isin("Polygon", "MultiPolygon") &&
-          col("dist_miles") <= radiusCol))
-    // ghost pre-filter only in distance mode (basic-filters, context.js:588)
-    val ghosted = if (distanceMode) joined.where(col("score") >= 0) else joined
-    // the per-(query, sub, idx) (distance, id) rank + vtquery cap now run
-    // inside each consumer's per-query kernel ([[rankCap]]) — every caller
-    // groups by (query_id[, sub]) anyway, so the row_number window here was
-    // a whole extra exchange + sort of the candidate rows
-    val ranked = ghosted
-      .withColumn("rnk", lit(0))
-      .withColumn("tmpid", tmpidCol(col("idx"), col("feature_id")))
-    ranked.withColumn("matched", lit(false))
-      .select(col("query_id"), col("sub"), col("idx"), col("layer"),
-      col("types"), coalesce(col("conflict"), lit("")).as("conflict"),
-      col("feature_id"), col("tmpid"), col("text"), col("dist_miles"),
-      col("score"), col("geom_type"),
-      col("f_lon").as("center_lon"), col("f_lat").as("center_lat"),
-      coalesce(col("langTexts"), map().cast("map<string,string>")).as("langTexts"),
-      col("matched"), col("rnk"))
-      .as[CandRow]
+    spark.createDataset(rows)
   }
 
   /** The vtquery result cap for a candidate list (context.js:587-588). */
@@ -175,10 +158,17 @@ object Reverse {
       .zipWithIndex.map { case (r, i) => r.copy(rnk = i + 1) }
 
   /** processVtQueryResults (reference context.js:448-556): pick one feature
-    * per layer from its (distance, id)-ordered candidate list.
-    * Priority: non-ghost forward phrasematch > ghost forward phrasematch >
-    * plain nearest; the exclusive target short-circuits everything.
-    * scoreModeEnabled mirrors source.geocoder_reverse_mode.
+    * per layer from its (distance, id)-ordered candidate list. The walk
+    * accepts the first candidate that is not a ghost (score < 0) and passes
+    * the score filter, matched by the forward phrasematch or not; every
+    * later candidate is farther, or as near with a larger id, and is
+    * skipped. So a matched non-ghost never beats a nearer, or equally near
+    * lower-id, unmatched one. The first matched ghost met before the
+    * accepted candidate is picked instead of it unless that candidate is
+    * matched; unmatched ghosts are skipped. The exclusive target
+    * short-circuits everything. scoreModeEnabled mirrors
+    * source.geocoder_reverse_mode. Whether carmen's context.js orders the
+    * same way is unchecked: no copy of it is at hand.
     */
   def pickPerIdx(rows0: Vector[CandRow], scoreMode: Boolean,
                  scoreModeEnabled: Boolean,
@@ -567,7 +557,33 @@ object Reverse {
           (r.head * l.scorefactor, r(1) * l.scorefactor))).headOption
     }
 
-    // 3x3 tile neighborhood at each matching layer's zoom — one equi-join
+    // address layers expose their INDIVIDUAL cluster points (the engine's
+    // analog of the reference's vectorized per-number vector-tile points,
+    // context.js:268-304 + indexdocs vectorizable): each point is its own
+    // nearest candidate carrying its house number
+    val (addrLayers, plainLayers) = layersOfType.partition(_.config.geocoderAddress)
+    // plain layers: the 3x3 tile neighborhood at each layer's zoom, probed
+    // in the resident tile lookup
+    val plainCand: Option[DataFrame] =
+      if (plainLayers.isEmpty) None
+      else {
+        import spark.implicits._
+        val plainIdxs = plainLayers.map(_.config.idx).toSet
+        val near = pts.withColumn("sub", lit(0)).as[CandPoint]
+        val rows = index.tileLookup.probe(TileLookup.keyed(near,
+            plainLayers.map(_.config.zoom).distinct, ring = 1)) {
+            (p: CandPoint, f: TileLookup.Feature) =>
+          if (!plainIdxs.contains(f.idx) || f.score < 0) None
+          // direct_hit_polygon: nearest-k never returns a polygon the
+          // point is outside of
+          else hitDistance(f, p.lon, p.lat)(_ => true).map { dist =>
+            NearCand(p.query_id, f.idx, f.layer, f.featureId, f.text, f.score,
+              dist, f.lon, f.lat, "")
+          }
+        }
+        Some(spark.createDataset(rows).toDF())
+      }
+    // address layers: the 3x3 tile neighborhood joined to the address points
     val tiles = layersOfType.map(_.config.zoom).distinct.map { z =>
       pts.withColumn("z", lit(z))
         .withColumn("tx0", GeoOps.tileX(col("lon"), z))
@@ -578,35 +594,6 @@ object Reverse {
       .withColumn("tx", col("tx0") + col("dxy").getItem(0))
       .withColumn("ty", col("ty0") + col("dxy").getItem(1))
       .drop("dxy", "tx0", "ty0")
-
-    // address layers expose their INDIVIDUAL cluster points (the engine's
-    // analog of the reference's vectorized per-number vector-tile points,
-    // context.js:268-304 + indexdocs vectorizable): each point is its own
-    // nearest candidate carrying its house number
-    val (addrLayers, plainLayers) = layersOfType.partition(_.config.geocoderAddress)
-    val plainCand: Option[DataFrame] =
-      if (plainLayers.isEmpty) None
-      else {
-        val tf = index.allTileFeatures
-          .where(col("idx").isin(plainLayers.map(_.config.idx): _*))
-        Some(tiles.join(tf, tiles("z") === tf("z") && tiles("tx") === tf("x") &&
-            tiles("ty") === tf("y"))
-          .drop(tf("z"))
-          .where(col("score") >= 0)
-          .withColumn("pd", pipDistUdf(col("geom_bin"), col("lon"), col("lat")))
-          .withColumn("direct_hit", col("pd._1"))
-          .withColumn("dist_miles", col("pd._2"))
-          .drop("pd")
-          // direct_hit_polygon: nearest-k never returns a polygon the
-          // point is outside of
-          .where(col("direct_hit") ||
-            !col("geom_type").isin("Polygon", "MultiPolygon"))
-          .withColumn("number", lit(""))
-          .select(col("query_id"), col("idx"), col("layer"), col("feature_id"),
-            col("text"), col("score"), col("dist_miles"),
-            col("f_lon").as("center_lon"), col("f_lat").as("center_lat"),
-            col("number")))
-      }
     val addrCand: Option[DataFrame] = addrLayers.map { l =>
       // per-layer cached address-point table (built once per index): the
       // per-call geometry decode + explode of every address feature is gone
@@ -644,6 +631,12 @@ object Reverse {
         col("layer"), col("text"), col("dist_miles"),
         col("center_lon"), col("center_lat"))
   }
+
+  /** A plain-layer nearest-k candidate, in the address candidates' columns. */
+  final case class NearCand(query_id: Long, idx: Int, layer: String,
+                            feature_id: Long, text: String, score: Double,
+                            dist_miles: Double, center_lon: Double,
+                            center_lat: Double, number: String)
 
   final case class TargetMeta(query_id: Long, sub: Int,
                               target_idx: Int, target_tmpid: Long)

@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.index.{BigGazetteer, IndexBuilder, PageSynth}
+import graft.index.{BigGazetteer, IndexBuilder, PageSynth, TileLookup}
 import graft.query.{Forward, Reverse}
 
 /** End-to-end geocode tests over the synthetic page corpus, mirroring the
@@ -74,6 +74,12 @@ class GeocodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(second.keySet.subsetOf(first.keySet))
     assert(second.values.sum === first.filter(e => second.contains(e._1)).values.sum)
     assert(index.allPostings.count() === index.layers.map(_.postings.count()).sum)
+    // the tile rows are resident only in the named lookup; the unified tile
+    // table is an uncached view over it with the same row count
+    assert(spark.sparkContext.getRDDStorageInfo.exists(r =>
+      r.name == TileLookup.Name && r.memSize + r.diskSize > 0))
+    assert(index.allTileFeatures.storageLevel === StorageLevel.NONE)
+    assert(index.allTileFeatures.count() === index.layers.map(_.tileFeatures.count()).sum)
   }
 
   test("an index rejects two layers with the same name") {

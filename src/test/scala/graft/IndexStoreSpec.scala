@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.index.{IndexBuilder, IndexStore, PageSynth}
-import graft.query.Forward
+import graft.query.{Forward, Reverse}
 
 /** Index persistence + resume (north rule: checkpointed, per-partition
   * lineage/metrics, restartable mid-job).
@@ -40,14 +40,28 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().toSeq.sortBy(_._1)
   }
 
+  private def rev(index: IndexBuilder.CarmenIndex): Seq[(Long, Int, String, Long, String)] = {
+    val sp = spark; import sp.implicits._
+    val pts = Seq((1L, -74.0, 40.9), (2L, -98.55, 29.95), (3L, -74.5, 40.7),
+      (4L, 10.0, 10.0)).toDF("query_id", "lon", "lat")
+    Reverse.reverse(spark, index, pts)
+      .select(col("query_id"), col("rank"), col("place_name"), col("feature_id"),
+        col("layer")).as[(Long, Int, String, Long, String)].collect().toSeq
+  }
+
   test("persist + load round-trips the index and its query results") {
     val built = IndexBuilder.build(spark, layers)
     val expected = fw(built, "West Lake View Rd Englewood")
+    val expectedRev = rev(built)
     built.layers.foreach(l => IndexStore.persistLayer(spark, l, root))
 
     val loaded = IndexBuilder.CarmenIndex(
       PageSynth.layerConfigs.map(c => IndexStore.loadLayer(spark, c, root)).toVector)
     assert(fw(loaded, "West Lake View Rd Englewood") === expected)
+    // the loaded index builds its tile lookup from the parquet tile_features,
+    // whose input partitioning differs from the built index's
+    assert(expectedRev.nonEmpty)
+    assert(rev(loaded) === expectedRev)
     // postings round-trip exactly
     built.layers.zip(loaded.layers).foreach { case (b, l) =>
       assert(b.postings.count() === l.postings.count(), b.config.name)

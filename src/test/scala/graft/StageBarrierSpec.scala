@@ -4,10 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The forward stages materialize only through `Forward.Call.barrier`, and
+/** The forward stages materialize only through `Forward.Call.barrier`,
   * the per-query kernels of `graft.query` group only through
-  * `PerQuery.kernel`, so the per-call materialization policy and the kernel
-  * partitioning rule each have one place to change.
+  * `PerQuery.kernel`, and the tile rows are read only through
+  * `TileLookup.probe`, so the per-call materialization policy, the kernel
+  * partitioning rule and the tile access each have one place to change.
   */
 class StageBarrierSpec extends AnyFunSuite {
   private val stageFiles =
@@ -44,6 +45,28 @@ class StageBarrierSpec extends AnyFunSuite {
     assert(hits.forall { case (file, i) =>
       file == "Forward.scala" && i > start && i < end
     }, s"localCheckpoint outside the barrier (file, 0-based line): $hits")
+  }
+
+  test("no query path reads the tile rows but through the one tile-lookup probe") {
+    val queryFiles = Files.list(Paths.get("src/main/scala/graft/query")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+    val unified = for {
+      f <- queryFiles
+      (l, i) <- code(f).zipWithIndex if l.contains("allTileFeatures")
+    } yield (f.getFileName.toString, i)
+    assert(unified.isEmpty, s"allTileFeatures read in graft.query (file, 0-based line): $unified")
+    val mainFiles = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+    val zips = for {
+      f <- mainFiles
+      (l, i) <- code(f).zipWithIndex if l.contains("zipPartitions")
+    } yield (f.getFileName.toString, i)
+    val helper = Paths.get("src/main/scala/graft/index/TileLookup.scala")
+    val (start, end) = body(code(helper), "def probe[")
+    assert(zips.nonEmpty)
+    assert(zips.forall { case (file, i) =>
+      file == "TileLookup.scala" && i >= start && i < end
+    }, s"zipPartitions outside TileLookup.probe (file, 0-based line): $zips")
   }
 
   test("groupByKey and flatMapGroups appear in graft.query only inside the per-query kernel helper") {
