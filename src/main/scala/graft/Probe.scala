@@ -31,7 +31,7 @@ import graft.query.{Forward, Phrasematch, Reverse, Spatialmatch}
   *    final AQE plan of named entries (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS).
   *  - `pm [cpus] [n]`: phrasematch branch, postings probe and pm-row times.
   *  - `ctx [cpus] [n]`: merged candidate table sizes, and plans and times of
-  *    the candidate branches and the context-fill tile join (plans go to
+  *    the candidate branches and the context-fill tile probe (plans go to
   *    /tmp/ctxplans).
   *  - `shuffle [cpus] [n] [forward|reverse]`: one JSON line per Spark
   *    stage of one warm forward() call over n queries (default) or
@@ -212,7 +212,7 @@ object Probe {
     time("postings_probe")(println(s"  rows=${matched.count()}"))
     dump("postings_probe", matched)
 
-    // the context-fill tile join, as forward() calls it
+    // the context-fill tile probe, as forward() calls it
     val leadPts = BigGazetteer.reversePoints(spark, nq, NPlaces)
       .select(col("query_id"), lit(1).as("sub"), col("lon"), col("lat"))
     val cands = Reverse.candidates(leadPts, index,

@@ -26,7 +26,7 @@ import graft.model._
   *  3. [[Verifymatch]]: lead covers joined to features, address-cluster/
   *     ITP resolution (reference verifymatch.js:397-492), the feature-phase
   *     chunk machine
-  *  4. [[ContextRank]]: one tile join at the verified leads' centers
+  *  4. [[ContextRank]]: one tile-lookup probe at the verified leads' centers
   *     (context fill), then one per-query kernel over the spatialmatch
   *     results, the leads and their tile candidates: context stacking,
   *     strict/loose re-rank and format

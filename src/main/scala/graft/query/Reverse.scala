@@ -81,7 +81,7 @@ object Reverse {
       // per context member like the reference's format-features path
       language: Option[String] = None)
 
-  /** One reverse candidate out of the tile join (R4): rank `rnk` within its
+  /** One reverse candidate out of the tile-lookup probe (R4): rank `rnk` within its
     * (query, sub, layer) group by (distance, id) — the engine's vtquery
     * result list. `sub` disambiguates multiple lookups per query (forward
     * result position, nearest-k rank); 0 for plain reverse.
